@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{CdcRoute, OrderOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import java.util.concurrent.ConcurrentHashMap
@@ -54,11 +54,11 @@ object OutboxPipeline {
   /** O7 (OrderService.kt:72-81, processor Main.kt:68-92): the reference
     * logs `Orders created: N (ratio% of decisions)` from a 30-second side
     * thread. The Spark shape: the sink's foreachBatch already knows both
-    * sides of the ratio — decisions entering the batch and orders the
-    * idempotent store actually accepted — so the report is pure derived
-    * state and needs no extra thread. Replayed batches count as consumed
-    * decisions but create 0 orders — exactly how the reference's
-    * at-least-once consumer counters behave. */
+    * sides of the ratio — decisions entering the batch (observed on the
+    * write job itself) and orders the idempotent store actually accepted —
+    * so the report is pure derived state and needs no extra thread or job.
+    * Replayed batches count as consumed decisions but create 0 orders —
+    * exactly how the reference's at-least-once consumer counters behave. */
   object RatioReport {
     @volatile var decisionsProcessed: Long = 0L
     @volatile var ordersCreated: Long = 0L
@@ -89,11 +89,18 @@ object OutboxPipeline {
 
   /** One micro-batch of the orders sink: size the decisions, write them
     * idempotently, feed the ratio report. Shared with test sinks that
-    * wrap it (e.g. crash injection in ResilienceSpec). */
+    * wrap it (e.g. crash injection in ResilienceSpec).
+    *
+    * One Spark action per batch: the decisions entering the batch are
+    * counted by an `Observation` on `batch`, read after the write job.
+    * `batch` is a plan over the micro-batch's RDD, so a separate
+    * `count()` would re-run the window aggregate's result stage and
+    * commit its state-store version a second time. */
   def writeDecisionsBatch(batch: DataFrame): Unit = {
-    val nDecisions = batch.count()
+    val entering = Observation()
     val createdBefore = TxnStore.orders.size()
-    val sized = OrderOps.fromDecisions(batch.sparkSession, batch)
+    val sized = OrderOps.fromDecisions(batch.sparkSession,
+      batch.observe(entering, count(lit(1)).as("decisions")))
     sized.select(
       col("client_order_id").as("clientOrderId"), col("symbol"),
       col("order_side").as("side"), col("action"),
@@ -103,7 +110,8 @@ object OutboxPipeline {
       .foreachPartition { (it: Iterator[OrderRec]) =>
         it.foreach(TxnStore.writeAtomically)
       }
-    RatioReport.record(nDecisions, (TxnStore.orders.size() - createdBefore).toLong)
+    RatioReport.record(entering.get("decisions").asInstanceOf[Long],
+      (TxnStore.orders.size() - createdBefore).toLong)
     ()
   }
 

@@ -40,23 +40,39 @@ class MetricsAndThroughputSpec extends SparkSpec {
     OutboxPipeline.TxnStore.clear()
     OutboxPipeline.RatioReport.reset()
     val base = Files.createTempDirectory("ratio").toString
+    val in = java.nio.file.Paths.get(base, "in")
+    Files.createDirectories(in)
     val rows = SignalGen.batch(spark, 600, baseTsMs = 1704067200000L, gapMs = 500L)
       .select("value").collect().map(_.getString(0))
-    Files.write(java.nio.file.Paths.get(base, "in.json"),
-      rows.mkString("\n").getBytes("UTF-8"))
+    Files.write(in.resolve("in.json"), rows.mkString("\n").getBytes("UTF-8"))
 
-    val raw = spark.readStream.text(base)
-      .selectExpr("value", "CAST(0 AS LONG) AS seq")
-    val parsed = SignalStream.dedupSignals(SignalStream.parse(raw))
-    val decisions = SignalStream.decisions(spark, parsed, "5 minutes")
-    val q = OutboxPipeline.ordersSink(spark, decisions, s"$base/ckpt").start()
+    def decisions() = {
+      val raw = spark.readStream.text(in.toString)
+        .selectExpr("value", "CAST(0 AS LONG) AS seq")
+      SignalStream.decisions(spark,
+        SignalStream.dedupSignals(SignalStream.parse(raw)), "5 minutes")
+    }
+    val q = OutboxPipeline.ordersSink(spark, decisions(), s"$base/ckpt").start()
     q.processAllAvailable()
     q.stop()
 
+    // the independent count: the same decisions stream over the same input
+    // into a memory sink, which keeps every row each batch emits
+    val truth = decisions().writeStream
+      .format("memory").queryName("o7_decisions")
+      .option("checkpointLocation", s"$base/ckpt_truth")
+      .outputMode("update").start()
+    truth.processAllAvailable()
+    truth.stop()
+    val emitted = spark.table("o7_decisions").count()
+
     val r = OutboxPipeline.RatioReport
+    assert(emitted > 0)
+    assert(r.decisionsProcessed == emitted,
+      "decisions processed must equal the rows the decisions stream emitted")
     assert(r.ordersCreated == OutboxPipeline.TxnStore.orders.size().toLong,
       "created count must equal what the store accepted")
-    assert(r.decisionsProcessed > 0 && r.ordersCreated > 0)
+    assert(r.ordersCreated > 0)
     assert(r.ordersCreated <= r.decisionsProcessed,
       "cannot create more orders than decisions consumed")
     val expectPct = r.ordersCreated * 100.0 / r.decisionsProcessed
