@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** MinHash + LSH near-duplicate detection and SimHash fingerprinting —
   * the scale-path dedup operators of the LLM-data-pipeline tier.
@@ -246,6 +247,21 @@ object MinHashOps {
     verifyJaccard(cand, docsGrams, docsGrams)
   }
 
+  /** The near-dup artifact's two stores as every writer has always
+    * written them (`bandPostings`' frames: `writeNearDupArtifact`, and the
+    * NearDupIngest appends and repairs). The per-batch probes read
+    * through these schemas, which skips the footer job that schema
+    * inference runs; IngestPipelineSpec pins them to the written files. */
+  val GramsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("lang", StringType),
+    StructField("grams", ArrayType(StringType))))
+  val PostingsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("lang", StringType),
+    StructField("band_idx", IntegerType),
+    StructField("band_hash", LongType)))
+
   /** Persist the corpus-side near-dup artifact — shingle sets + band
     * postings — as parquet: the CROSS-SESSION form of the shared
     * in-memory caches. A production pipeline materializes this once per
@@ -285,11 +301,12 @@ object MinHashOps {
       batchSides: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val (batchGrams, batchPostings) =
       batchSides.getOrElse(bandPostings(spark, batchDocs))
-    val keys = batchPostings.select("band_hash").distinct()
-      .localCheckpoint(true)
-    val corpusPostings0 = spark.read.parquet(s"$artifactPath/postings")
+    val (keys, nKeys) =
+      Pin.counted(batchPostings.select("band_hash").distinct())
+    val corpusPostings0 =
+      spark.read.schema(PostingsSchema).parquet(s"$artifactPath/postings")
     val corpusPostings =
-      if (keys.count() <= ProbeIsinThreshold) {
+      if (nKeys <= ProbeIsinThreshold) {
         val hs = keys.collect().map(_.getLong(0))
         corpusPostings0.filter(col("band_hash").isin(hs: _*))
       } else
@@ -304,10 +321,11 @@ object MinHashOps {
       .select("d1", "d2")
       .distinct()
       .localCheckpoint(true)
-    val d1s = cand.select("d1").distinct().localCheckpoint(true)
-    val corpusGrams0 = spark.read.parquet(s"$artifactPath/grams")
+    val (d1s, nD1) = Pin.counted(cand.select("d1").distinct())
+    val corpusGrams0 =
+      spark.read.schema(GramsSchema).parquet(s"$artifactPath/grams")
     val corpusGrams =
-      if (d1s.count() <= ProbeIsinThreshold) {
+      if (nD1 <= ProbeIsinThreshold) {
         val ids = d1s.collect().map(_.getLong(0))
         corpusGrams0.filter(col("doc_id").isin(ids: _*))
       } else

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pin
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -29,6 +30,16 @@ object CorpusIngest {
     StructField("text", StringType),
     StructField("lang", StringType),
     StructField("source", StringType)))
+
+  /** The corpus store columns every writer has always written and the
+    * per-batch probes read: `doc_id` and its text fingerprint `fp`
+    * (md5 hex). The other columns differ by face (the composed pipeline
+    * also stores the gate's evidence columns), so they are not declared.
+    * Reading through this schema skips the footer job that schema
+    * inference runs; IngestPipelineSpec pins it to the written files. */
+  val storeSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("fp", StringType)))
 
   private def storeExists(spark: SparkSession, store: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(store)
@@ -66,10 +77,8 @@ object CorpusIngest {
     // materialize BEFORE appending: the plan reads the store's current
     // files; localCheckpoint pins the result so the append can't race
     // its own input listing
-    val admitted = keepers
-      .join(hits.select("fp").distinct(), Seq("fp"), "left_anti")
-      .localCheckpoint(true)
-    val n = admitted.count()
+    val (admitted, n) = Pin.counted(keepers
+      .join(hits.select("fp").distinct(), Seq("fp"), "left_anti"))
     if (n > 0) appendFresh(spark, store, admitted)
     n
   }
@@ -107,11 +116,10 @@ object CorpusIngest {
         batchFp0.filter(might(col("fp")))
       case None => batchFp0 // pre-bloom store: no pre-screen
     }
-    val cand = batchFp.localCheckpoint(true)
-    val nCand = cand.count()
+    val (cand, nCand) = Pin.counted(batchFp)
     bcOpt.foreach(_.destroy())
     if (nCand == 0) return empty // fresh batch: store never read
-    val s0 = spark.read.parquet(store)
+    val s0 = spark.read.schema(storeSchema).parquet(store)
       .select(col("fp"), col("doc_id").as("store_doc"))
     val hits =
       if (nCand <= BloomSide.IsinThreshold)
@@ -226,11 +234,10 @@ object CorpusIngest {
         ids0.filter(might(col("doc_id")))
       case None => ids0 // pre-idbloom store: no pre-screen
     }
-    val cand = ids.localCheckpoint(true)
-    val nCand = cand.count()
+    val (cand, nCand) = Pin.counted(ids)
     bcOpt.foreach(_.destroy())
     if (nCand == 0) return batch // fresh batch: store never read
-    val s0 = spark.read.parquet(store).select("doc_id")
+    val s0 = spark.read.schema(storeSchema).parquet(store).select("doc_id")
     val stored =
       if (nCand <= BloomSide.IsinThreshold)
         s0.filter(col("doc_id").isin(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pin
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -50,7 +51,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * store bytes), the near-dup screen's postings/grams reads are
   * bounded by the batch's band keys and candidate ids, and the index
   * writes only touched cells. Nothing in the composition pays a
-  * corpus-sized pass per batch. */
+  * corpus-sized pass per batch. What a small batch does pay is a fixed
+  * cost per Spark job, so no job only counts rows or infers a schema:
+  * every report count is taken by the job that pins its frame
+  * (graft.Pin), and every store probe reads through the store's
+  * declared schema. A warm 100-doc batch runs ~105 jobs;
+  * IngestPipelineSpec gates the count for its filled-store batch. */
 object IngestPipeline {
 
   /** Per-batch admission accounting. `nIn` counts RAW arrivals;
@@ -77,9 +83,11 @@ object IngestPipeline {
 
   /** The pinned per-stage frames of ONE batch's screen cascade — the
     * single derivation both faces consume: `mergeBatch` (streaming,
-    * real stores) adds the admissions; `cascade` (the oracle-checked
-    * batch query) reads the stage memberships. Every frame is
-    * localCheckpointed, so stage counts re-read pinned partitions. */
+    * real stores) adds the admissions and reports the counts; `cascade`
+    * (the oracle-checked batch query) reads the stage memberships and
+    * ignores the counts. Every frame is localCheckpointed, and each
+    * stage count is taken by the job that pins its frame (Pin.counted),
+    * so no stage count launches a job of its own. */
   private[streaming] final case class ScreenState(
       gated: DataFrame,    // gate survivors
       docs1: DataFrame,    // + exact-screen survivors
@@ -90,7 +98,9 @@ object IngestPipeline {
                             // doc_ids were already dropped at
                             // mergeBatch's DOOR, before the screens
       grams: DataFrame, postings: DataFrame,
-      substrProbe: SubstrIngest.BatchProbe)
+      substrProbe: SubstrIngest.BatchProbe,
+      nGated: Long, nDocs1: Long, nNearRej: Long, nSubstrRej: Long,
+      nSurvivors: Long)
 
   /** Gate → exact → near-dup → substring, each screen seeing only the
     * previous screen's survivors, every store probe own-doc-excluded
@@ -109,7 +119,7 @@ object IngestPipeline {
     StagedSwap.resume(spark, corpus, Seq(s"$corpus.stage", s"$corpus.forget"))
 
     // 1. stateless quality/PII gate
-    val gated = CorpusIngest.gate(pinned).localCheckpoint(true)
+    val (gated, nGated) = Pin.counted(CorpusIngest.gate(pinned))
 
     // 2. exact-text screen: one keeper per fingerprint within the batch
     // (lowest doc_id), plus any store fingerprint held by a DIFFERENT
@@ -127,8 +137,8 @@ object IngestPipeline {
       .join(exactHits, Seq("fp"))
       .filter(col("doc_id") =!= col("store_doc"))
       .select("doc_id").distinct()
-    val docs1 = keepers.join(exactCross, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val (docs1, nDocs1) =
+      Pin.counted(keepers.join(exactCross, Seq("doc_id"), "left_anti"))
 
     // 3. near-duplicate screen (cascaded: exact survivors only). The
     // band signatures are derived ONCE and pinned — the screen and the
@@ -138,22 +148,23 @@ object IngestPipeline {
         spark, docs1, cache = false)
       (g.localCheckpoint(true), p.localCheckpoint(true))
     }
-    val nearRej = NearDupIngest.screenRejects(spark, docs1, nearDir(root),
-        dfCap, batchSides = Some((grams1, post1)))
-      .localCheckpoint(true)
+    val (nearRej, nNearRej) = Pin.counted(
+      NearDupIngest.screenRejects(spark, docs1, nearDir(root),
+        dfCap, batchSides = Some((grams1, post1))))
     val docs2 = docs1.join(nearRej, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
 
     // 4. exact-substring screen (cascaded again) — one gram derivation
     // + one store probe, shared with the admission
     val substrProbe = SubstrIngest.probe(spark, docs2, substrDir(root), k)
-    val substrRej = SubstrIngest
+    val (substrRej, nSubstrRej) = Pin.counted(SubstrIngest
       .screenWith(spark, docs2, substrDir(root), k, substrProbe)
-      .filter(col("reject")).select("doc_id").localCheckpoint(true)
-    val survivors = docs2.join(substrRej, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .filter(col("reject")).select("doc_id"))
+    val (survivors, nSurvivors) =
+      Pin.counted(docs2.join(substrRej, Seq("doc_id"), "left_anti"))
     ScreenState(gated, docs1, nearRej, docs2, substrRej, survivors,
-      grams1, post1, substrProbe)
+      grams1, post1, substrProbe,
+      nGated, nDocs1, nNearRej, nSubstrRej, nSurvivors)
   }
 
   /** Cadence-knob validation shared by [[mergeBatch]] and [[ingest]]
@@ -197,8 +208,7 @@ object IngestPipeline {
     // (runScreens resumes again — idempotent — for its own probes)
     StagedSwap.resume(spark, corpus, Seq(s"$corpus.stage", s"$corpus.forget"))
     // the raw batch feeds the governance rollup — pin it once
-    val rawPinned = batch.localCheckpoint(true)
-    val nIn = rawPinned.count()
+    val (rawPinned, nIn) = Pin.counted(batch)
     if (nIn == 0) return BatchReport(0, 0, 0, 0, 0, 0, 0)
 
     // THE DOOR — both rules run BEFORE the screens, because a row the
@@ -230,11 +240,10 @@ object IngestPipeline {
     // trials pin this).
     val wId = Window.partitionBy("doc_id")
       .orderBy(md5(col("text").cast("binary")), col("lang"), col("source"))
-    val pinned = CorpusIngest.dropStoredIds(spark,
+    val (pinned, nDoor) = Pin.counted(CorpusIngest.dropStoredIds(spark,
       rawPinned.withColumn("rn", row_number().over(wId))
         .filter(col("rn") === 1).drop("rn"),
-      corpus).localCheckpoint(true)
-    val nDoor = pinned.count()
+      corpus))
     val nAbsorbed = nIn - nDoor
     if (nDoor == 0) {
       // governance still records the arrivals (batchId-gated)
@@ -244,14 +253,10 @@ object IngestPipeline {
     }
 
     val scr = runScreens(spark, pinned, root, dfCap, k)
-    val nGated = scr.gated.count()
-    val nExactRej = nGated - scr.docs1.count()
-    val nNearRej = scr.nearRej.count()
-    val nSubstrRej = scr.substrRej.count()
     val (grams1, post1) = (scr.grams, scr.postings)
     val substrProbe = scr.substrProbe
     val survivors = scr.survivors
-    val nAdmitted = survivors.count()
+    val nAdmitted = scr.nSurvivors
 
     // 5. admissions — each independently idempotent; order among the
     // four NON-corpus admissions (near-dup, substr, index train+merge)
@@ -327,8 +332,8 @@ object IngestPipeline {
         compactFiles, compactGrowth, nAdmitted))
       afterStage("compact")
 
-    BatchReport(nIn, nAbsorbed, nDoor - nGated, nExactRej, nNearRej,
-      nSubstrRej, nAdmitted)
+    BatchReport(nIn, nAbsorbed, nDoor - scr.nGated, scr.nGated - scr.nDocs1,
+      scr.nNearRej, scr.nSubstrRej, nAdmitted)
   }
 
   /** BATCH face of the composed ingest — the `doc_ingest_cascade`
@@ -723,8 +728,9 @@ object IngestPipeline {
     * stores under ONE checkpoint. The 1-second default trigger is the
     * spec/demo shape; production deployments should pass a 30-60 s
     * trigger — PipeBench's record (BASELINE.md r8): the DAG's ~8 s
-    * fixed cost amortizes to 0.7-1k docs/s per 8 cores at the
-    * 12.5-25k-doc batches such a trigger carries. */
+    * fixed cost then amortized to 0.7-1k docs/s per 8 cores at the
+    * 12.5-25k-doc batches such a trigger carries. The fixed cost is
+    * mostly per Spark job (see the Scale note above). */
   def ingest(spark: SparkSession, srcDir: String, root: String,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.Pin
 import graft.operators.{MinHashOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming NEAR-duplicate ingestion — the scale path CorpusIngest's
   * exact-dedup leaves open: documents arrive continuously, each batch
@@ -92,8 +94,8 @@ object NearDupIngest {
           .filter(col("jaccard") >= Threshold)
           .select(col("d2").as("doc_id")).distinct()
       else selfPairs.limit(0)
-    val rejects = selfPairs.union(crossRejects).distinct().localCheckpoint(true)
-    val nRejected = rejects.count()
+    val (rejects, nRejected) =
+      Pin.counted(selfPairs.union(crossRejects).distinct())
 
     val admittedGrams = batchGrams.join(rejects, Seq("doc_id"), "left_anti")
     val admittedPost = batchPostings.join(rejects, Seq("doc_id"), "left_anti")
@@ -129,26 +131,28 @@ object NearDupIngest {
       .limit(MinHashOps.ProbeIsinThreshold + 1)
       .collect().map(_.getLong(0)).toSeq
     val useIsin = batchIds.length <= MinHashOps.ProbeIsinThreshold
-    def storeIds(sub: String): DataFrame = {
-      val all = spark.read.parquet(s"$artifact/$sub").select("doc_id")
+    def storeIds(sub: String, schema: StructType): DataFrame = {
+      val all = spark.read.schema(schema).parquet(s"$artifact/$sub")
+        .select("doc_id")
       (if (useIsin) all.filter(col("doc_id").isin(batchIds: _*)) else all)
         .distinct()
     }
     val freshGrams0 =
       if (dirExists(spark, s"$artifact/grams") && batchIds.nonEmpty)
-        admittedGrams.join(storeIds("grams"), Seq("doc_id"), "left_anti")
+        admittedGrams.join(storeIds("grams", MinHashOps.GramsSchema),
+          Seq("doc_id"), "left_anti")
       else admittedGrams
-    val freshGrams = freshGrams0.localCheckpoint(true)
-    val nAdmitted = freshGrams.count()
+    val (freshGrams, nAdmitted) = Pin.counted(freshGrams0)
     if (nAdmitted > 0)
       freshGrams.write.mode(SaveMode.Append).parquet(s"$artifact/grams")
     afterGramsAppend()
     val freshPost0 =
       if (dirExists(spark, s"$artifact/postings") && batchIds.nonEmpty)
-        admittedPost.join(storeIds("postings"), Seq("doc_id"), "left_anti")
+        admittedPost.join(storeIds("postings", MinHashOps.PostingsSchema),
+          Seq("doc_id"), "left_anti")
       else admittedPost
-    val freshPost = freshPost0.localCheckpoint(true)
-    if (freshPost.count() > 0)
+    val (freshPost, nFreshPost) = Pin.counted(freshPost0)
+    if (nFreshPost > 0)
       freshPost.write.mode(SaveMode.Append).parquet(s"$artifact/postings")
     nAdmitted
   }
@@ -200,8 +204,7 @@ object NearDupIngest {
           spark.read.parquet(s"$artifact/postings").select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")
       else grams
-    val orphans = orphans0.localCheckpoint(true)
-    val n = orphans.count()
+    val (orphans, n) = Pin.counted(orphans0)
     if (n > 0) MinHashOps.postingsFromGrams(spark, orphans)
       .write.mode(SaveMode.Append).parquet(s"$artifact/postings")
     n

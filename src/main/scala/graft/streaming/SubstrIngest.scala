@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.Pin
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Streaming EXACT-SUBSTRING screening — the ingest face of
@@ -81,6 +83,16 @@ object SubstrIngest {
 
   private def bloomDir(store: String) = s"$store/bloom"
 
+  /** The hash store (`$store/grams`) as every writer has always written
+    * it: one (doc_id, h) row per admitted doc and distinct K-gram hash
+    * (`appendFresh`, `compactStore`'s rewrite, the pipeline's purge).
+    * The per-batch probe reads through it, which skips the footer job
+    * that schema inference runs; IngestPipelineSpec pins it to the
+    * written files. */
+  val GramsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("h", LongType)))
+
   /** JVM-local detectability counter for MONOTONE-ID ARRIVAL CONTRACT
     * violations (r8 advice: the contract was documented but a violating
     * source produced no signal — two silently stored copies). Counts
@@ -136,21 +148,29 @@ object SubstrIngest {
     * genuinely fresh low-id doc). Runs on BOTH admission faces: the
     * standalone `mergeBatch` AND the composed-pipeline `admit` path,
     * which previously maintained the watermark but never checked against
-    * it — the detection claim was inert on the primary production path. */
+    * it — the detection claim was inert on the primary production path.
+    *
+    * The same aggregate takes the batch's max doc_id (rejected and
+    * replayed docs included), which it returns: the watermark basis the
+    * caller bumps AFTER its rows land. r9 ADVICE #2: bumping from
+    * `fresh` (rows actually appended) left the watermark stale whenever
+    * a batch's highest-id docs were rejected or fully replayed, so later
+    * sub-max arrivals went undetected. */
   private[streaming] def checkArrivalContract(spark: SparkSession,
-      docs: DataFrame, store: String): Long =
-    readMaxId(spark, store).map { w =>
-      val low = docs.filter(col("doc_id") <= w)
-        .select("doc_id").distinct().count()
-      if (low > 0) {
-        nonMonotoneArrivals.addAndGet(low)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"SubstrIngest: $low batch doc(s) at or below the store " +
-          s"max-id watermark $w — crash-replay, or a non-monotone " +
-          "source violating the arrival contract (see mergeBatch doc)")
-      }
-      low
-    }.getOrElse(0L)
+      docs: DataFrame, store: String): Option[Long] = {
+    val w = readMaxId(spark, store)
+    val r = docs.agg(max(col("doc_id")), w.fold(lit(0L))(x =>
+      count_distinct(when(col("doc_id") <= x, col("doc_id"))))).head
+    val low = r.getLong(1)
+    if (low > 0) {
+      nonMonotoneArrivals.addAndGet(low)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"SubstrIngest: $low batch doc(s) at or below the store " +
+        s"max-id watermark ${w.get} — crash-replay, or a non-monotone " +
+        "source violating the arrival contract (see mergeBatch doc)")
+    }
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
 
   private def readBloom(spark: SparkSession, store: String): Option[BloomFilter] =
     BloomSide.read(spark, bloomDir(store))
@@ -208,11 +228,10 @@ object SubstrIngest {
         batchH0.filter(might(col("h")))
       case None => batchH0 // pre-bloom store: no pre-screen
     }
-    val cand = batchH.localCheckpoint(true)
-    val nCand = cand.count()
+    val (cand, nCand) = Pin.counted(batchH)
     bcOpt.foreach(_.destroy())
     if (nCand == 0) return empty // fresh batch: store never read
-    val storeRows = spark.read.parquet(live)
+    val storeRows = spark.read.schema(GramsSchema).parquet(live)
     val hits =
       if (nCand <= IsinThreshold) {
         val hs = cand.collect().map(_.getLong(0))
@@ -287,7 +306,7 @@ object SubstrIngest {
       k: Int = TextOps.SubstrK,
       afterBloomWrite: () => Unit = () => ()): (Long, Long) = {
     val live = s"$store/grams"
-    checkArrivalContract(spark, batch, store)
+    val batchMax = checkArrivalContract(spark, batch, store)
     // several passes consume the batch's gram derivation — pin it once
     // (localCheckpoint, not cache(): nothing leaks across batches)
     val pos = TextOps.substrPosFrame(batch, k).localCheckpoint(true)
@@ -302,12 +321,10 @@ object SubstrIngest {
       .select("doc_id", "pos")
     val storeHits = probeStore(spark, pos, store)
     val dupPos = withinDup.union(crossDupPos(pos, storeHits)).distinct()
-    val rejects = TextOps.substrIslands(dupPos, k)
+    val (rejects, nRejected) = Pin.counted(TextOps.substrIslands(dupPos, k)
       .join(nTok, "doc_id")
       .filter(col("dup_tokens") * 2 > col("n_tokens"))
-      .select("doc_id")
-      .localCheckpoint(true)
-    val nRejected = rejects.count()
+      .select("doc_id"))
     // admitted docs' DISTINCT hashes; anti-join at (doc_id, h)
     // granularity — against the probe result, which is complete for
     // the batch's hashes — so a replay appends only genuinely missing
@@ -317,7 +334,7 @@ object SubstrIngest {
     val fresh = admitted.join(storeHits, Seq("doc_id", "h"), "left_anti")
       .localCheckpoint(true)
     val nAdmitted = appendFresh(spark, store, fresh, afterBloomWrite,
-      batchMaxId(batch))
+      batchMax)
     (nAdmitted, nRejected)
   }
 
@@ -333,18 +350,7 @@ object SubstrIngest {
   def recordArrivals(spark: SparkSession, arrivals: DataFrame,
       store: String): Unit = {
     checkArrivalContract(spark, arrivals, store)
-    batchMaxId(arrivals).foreach(bumpMaxId(spark, store, _))
-  }
-
-  /** Max doc_id of the FULL batch (rejected and replayed docs included)
-    * — the watermark basis. r9 ADVICE #2: bumping from `fresh` (rows
-    * actually appended) left the watermark stale whenever a batch's
-    * highest-id docs were rejected or fully replayed, so later sub-max
-    * arrivals went undetected — broader than the documented one-batch
-    * crash degradation. One tiny agg over the small batch side. */
-  private def batchMaxId(batch: DataFrame): Option[Long] = {
-    val mx = batch.agg(max(col("doc_id"))).head
-    if (mx.isNullAt(0)) None else Some(mx.getLong(0))
+      .foreach(bumpMaxId(spark, store, _))
   }
 
   /** The shared append tail: bloom-before-rows with the pre-bloom-store
@@ -411,7 +417,7 @@ object SubstrIngest {
     // composed pipeline's door has already dropped stored ids, so a
     // sub-watermark doc here is a genuine contract violation or a
     // forget-then-reingest — both worth the counter.
-    checkArrivalContract(spark, arrived, store)
+    val batchMax = checkArrivalContract(spark, arrived, store)
     val (pos0, storeHits) = pre match {
       case Some(p) =>
         (p.pos.join(docs.select("doc_id"), Seq("doc_id"), "left_semi"),
@@ -423,7 +429,7 @@ object SubstrIngest {
     val fresh = pos0.select("doc_id", "h").distinct()
       .join(storeHits, Seq("doc_id", "h"), "left_anti")
       .localCheckpoint(true)
-    appendFresh(spark, store, fresh, afterBloomWrite, batchMaxId(arrived))
+    appendFresh(spark, store, fresh, afterBloomWrite, batchMax)
   }
 
   /** Pinned per-batch probe state — ONE gram derivation + ONE store

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,6 +43,22 @@ object VectorIndex {
   val embeddingSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(DoubleType))))
+
+  /** The two stores as every writer has always written them (`train`,
+    * `retrain`, `mergeBatch`, `compact`, `forget`). The vectors' `cell`
+    * is the partition directory, declared with the type partition
+    * inference gives it (int). The ingest path reads through these
+    * schemas, which skips the footer job that schema inference runs;
+    * IngestPipelineSpec pins them to the written files. */
+  val CentroidSchema: StructType = StructType(Seq(
+    StructField("cid", LongType),
+    StructField("v", ArrayType(DoubleType)),
+    StructField("dot_self", DoubleType)))
+  val VectorSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("v", ArrayType(DoubleType)),
+    StructField("dot_self", DoubleType),
+    StructField("cell", IntegerType)))
 
   /** EPOCH RESOLUTION — the blue/green layout `retrain` swaps between:
     * an epoch-N index lives at `centroids@N` / `vectors@N`; a store
@@ -101,7 +118,7 @@ object VectorIndex {
     * collect class as the in-session init). */
   private def centroids(spark: SparkSession,
       store: String): Seq[(Long, Seq[Double], Double)] =
-    spark.read.parquet(centDir(spark, store))
+    spark.read.schema(CentroidSchema).parquet(centDir(spark, store))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1).toIndexedSeq
@@ -150,7 +167,7 @@ object VectorIndex {
     if (!isTrained(spark, store)) train(spark, batch, store)
     val cents = centroids(spark, store)
     if (cents.isEmpty) return 0L // nothing indexable seeded a quantizer
-    val assigned = normed(batch)
+    val assigned0 = normed(batch)
       .dropDuplicates("vec_id")
       .withColumn("cell", graft.plans.GraftFunctions
         .graftIvfAssign(spark, "v", cents)("cell"))
@@ -161,23 +178,21 @@ object VectorIndex {
       // permanently — drop it here, mirroring search's probe filter
       // (advice r6)
       .filter(col("cell").isNotNull)
-      .localCheckpoint(true)
-    if (assigned.isEmpty) return 0L
+    val (assigned, nAssigned) = Pin.counted(assigned0)
+    if (nAssigned == 0L) return 0L
     // touched cells: bounded by k (the handful-of-ints collect class)
     val touched = assigned.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cur =
+    val (cur, nCur) =
       if (vectorsExist(spark, store))
-        spark.read.parquet(vecDir(spark, store))
-          .filter(col("cell").isin(touched: _*))
-          .select("vec_id")
-          .localCheckpoint(true)
-      else spark.emptyDataFrame
-    val fresh =
-      (if (cur.isEmpty) assigned
-       else assigned.join(cur, Seq("vec_id"), "left_anti"))
-        .localCheckpoint(true)
-    val applied = fresh.count()
+        Pin.counted(
+          spark.read.schema(VectorSchema).parquet(vecDir(spark, store))
+            .filter(col("cell").isin(touched: _*))
+            .select("vec_id"))
+      else (spark.emptyDataFrame, 0L)
+    val (fresh, applied) = Pin.counted(
+      if (nCur == 0L) assigned
+      else assigned.join(cur, Seq("vec_id"), "left_anti"))
     if (applied > 0)
       fresh.select("cell", "vec_id", "v", "dot_self")
         .write.mode("append").partitionBy("cell").parquet(vecDir(spark, store))

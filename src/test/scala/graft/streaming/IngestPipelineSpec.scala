@@ -905,6 +905,76 @@ class IngestPipelineSpec extends SparkSpec {
       col("source") === "sa").isEmpty)
   }
 
+  /** b1 then b2 into a fresh root, with the Spark jobs of b2's
+    * mergeBatch (filled stores: each of b2's dups makes its screen read
+    * its store) — shared by the jobs gate and the schema pin. */
+  private lazy val filled: (String, Seq[String]) = {
+    val root = Files.createTempDirectory("pipe-jobs").toString + "/p"
+    IngestPipeline.mergeBatch(spark, b1, root, batchId = 0L)
+    val (r2, jobs) = graft.JobCount(spark)(
+      IngestPipeline.mergeBatch(spark, b2, root, batchId = 1L))
+    assert(r2 == IngestPipeline.BatchReport(4, 0, 0, 1, 1, 1, 1), s"b2: $r2")
+    (root, jobs)
+  }
+
+  /** Jobs of b2's mergeBatch as measured in this suite's session
+    * (local[4], 4 shuffle partitions, AQE on). Equality is expected;
+    * a lower count after a change should lower this bound with it. */
+  private val JobsPerFilledBatch = 95
+
+  test("jobs per batch: a mergeBatch into filled stores stays within " +
+    "its measured job count, so no count or schema-inference job " +
+    "comes back") {
+    val (_, jobs) = filled
+    val bySite = jobs.groupBy(identity).toSeq
+      .map { case (s, xs) => s"${xs.size} × $s" }.sorted.mkString("; ")
+    info(s"${jobs.size} jobs: $bySite")
+    assert(jobs.size <= JobsPerFilledBatch,
+      s"${jobs.size} jobs > $JobsPerFilledBatch: $bySite")
+  }
+
+  test("declared store schemas match, by name and type, the fields the " +
+    "writers put in every parquet file of their store — appends and " +
+    "compactAll's rewrites") {
+    val (root, _) = filled
+    import org.apache.spark.sql.types.{IntegerType, StructType}
+    def fields(t: StructType): Map[String, String] =
+      t.fields.map(f => f.name -> f.dataType.sql).toMap // sql omits nullability
+    // (declared, store dir, files must hold exactly the declared set)
+    def check(): Unit = {
+      val stores = Seq(
+        (CorpusIngest.storeSchema, IngestPipeline.corpusDir(root), false),
+        (graft.operators.MinHashOps.GramsSchema,
+          s"${IngestPipeline.nearDir(root)}/grams", true),
+        (graft.operators.MinHashOps.PostingsSchema,
+          s"${IngestPipeline.nearDir(root)}/postings", true),
+        (SubstrIngest.GramsSchema,
+          s"${IngestPipeline.substrDir(root)}/grams", true),
+        (VectorIndex.CentroidSchema,
+          s"${IngestPipeline.indexDir(root)}/centroids", true),
+        (StructType(VectorIndex.VectorSchema.filter(_.name != "cell")),
+          vecsDir(root), true))
+      for ((declared, dir, exact) <- stores) {
+        val files = parquetFiles(dir)
+        assert(files.nonEmpty, s"no parquet files under $dir")
+        files.foreach { f =>
+          val written = fields(spark.read.parquet(f).schema)
+          val want = fields(declared)
+          if (exact) assert(written == want, s"$f: $written vs $want")
+          else assert(want.forall { case (n, t) => written.get(n).contains(t) },
+            s"$f: $written lacks $want")
+        }
+      }
+      // the vectors' partition column keeps the type inference gives it
+      assert(spark.read.parquet(vecsDir(root)).schema("cell").dataType ==
+        VectorIndex.VectorSchema("cell").dataType &&
+        VectorIndex.VectorSchema("cell").dataType == IntegerType)
+    }
+    check()
+    IngestPipeline.compactAll(spark, root, 2)
+    check()
+  }
+
   test("pipeline soak: per-batch cost stays flat as all five stores " +
     "grow — every tier's store probe is bounded, so a fresh batch " +
     "reads no store bytes on any screen or admission path") {
