@@ -28,14 +28,14 @@ object DecompProbe {
     }
     time("trigrams") {
       docs.select(col("doc_id"),
-        size(GraftFunctions.graftTrigrams(spark, "toks")).as("n"))
+        size(GraftFunctions.graftTrigrams("toks")).as("n"))
         .write.format("noop").mode("overwrite").save()
     }
     time("trigrams+minhash") {
       docs.select(col("doc_id"),
-        GraftFunctions.graftTrigrams(spark, "toks").as("grams"))
+        GraftFunctions.graftTrigrams("toks").as("grams"))
         .select(col("doc_id"),
-          size(GraftFunctions.graftMinhash(spark, "grams")).as("n"))
+          size(GraftFunctions.graftMinhash("grams")).as("n"))
         .write.format("noop").mode("overwrite").save()
     }
     time("full dedup_minhash_lsh") {
@@ -100,7 +100,7 @@ object DecompProbe {
         .withColumn("fp64",
           conv(substring(col("fp_md5"), 1, 15), 16, 10).cast("long"))
         .withColumn("n_shingles",
-          size(GraftFunctions.graftTrigrams(spark, "toks")).cast("long"))
+          size(GraftFunctions.graftTrigrams("toks")).cast("long"))
         .select("doc_id", "fp_md5", "fp64", "n_shingles")
         .write.format("noop").mode("overwrite").save()
     }
@@ -111,7 +111,7 @@ object DecompProbe {
         .withColumn("fp64",
           conv(substring(col("fp_md5"), 1, 15), 16, 10).cast("long"))
         .withColumn("n_shingles",
-          size(GraftFunctions.graftTrigrams(spark, "toks")).cast("long"))
+          size(GraftFunctions.graftTrigrams("toks")).cast("long"))
         .withColumn("fp_roll",
           graft.operators.TextOps.fpRollComposed(col("toks")))
         .select("doc_id", "fp_md5", "fp64", "n_shingles", "fp_roll")

@@ -87,7 +87,7 @@ object ForgetProbe {
       .orderBy(col("doc_id").desc).limit(3)
       .withColumn("toks", operators.TextOps.tokens)
       .select(col("doc_id").as("vec_id"),
-        plans.GraftFunctions.graftHashEmbed(spark, "toks")
+        plans.GraftFunctions.graftHashEmbed("toks")
           .cast("array<double>").as("embedding"))
     t0 = System.nanoTime()
     val hits = streaming.IngestPipeline.searchCorpus(spark, root, q,

@@ -21,7 +21,7 @@ object RollAb {
         operators.TextOps.fpRollComposed(col("toks")).as("fp_roll"))
     def custom = base
       .select(col("doc_id"),
-        plans.GraftFunctions.graftRollHash(spark, "toks").as("fp_roll"))
+        plans.GraftFunctions.graftRollHash("toks").as("fp_roll"))
     def run(df: org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()

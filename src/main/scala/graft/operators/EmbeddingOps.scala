@@ -200,8 +200,7 @@ object EmbeddingOps {
       e.select(col("vec_id"), element_at(ranked, 1)("cid").as("cell"),
         element_at(ranked, 2)("cid").as("cell2"))
     } else {
-      val asg = graft.plans.GraftFunctions.graftIvfAssign(
-        e.sparkSession, "v", initCentroids(e))
+      val asg = graft.plans.GraftFunctions.graftIvfAssign("v", initCentroids(e))
       e.select(col("vec_id"), asg("cell").as("cell"), asg("cell2").as("cell2"))
     }
   }
@@ -238,7 +237,7 @@ object EmbeddingOps {
     * composed 16-fold-dot + sort form at 31%/27% of the ivf/ivf2
     * queries (over the r2 doGenCode gate's 20% line). */
   private def ivfTail(e: DataFrame, cents: Seq[(Long, Seq[Double], Double)]): DataFrame = {
-    val asg = graft.plans.GraftFunctions.graftIvfAssign(e.sparkSession, "v", cents)
+    val asg = graft.plans.GraftFunctions.graftIvfAssign("v", cents)
     val assigned = e.withColumn("asg", asg)
       .withColumn("cell", col("asg.cell"))
       .withColumn("cell2", col("asg.cell2"))
@@ -283,7 +282,7 @@ object EmbeddingOps {
       s"ivf-lloyd:${System.identityHashCode(spark)}:$dir") {
       val cents0 = initCentroids(e)
       val assigned0 = e.withColumn("cell",
-        graft.plans.GraftFunctions.graftIvfAssign(e.sparkSession, "v", cents0)("cell"))
+        graft.plans.GraftFunctions.graftIvfAssign("v", cents0)("cell"))
       val sums = assigned0
         .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
         .withColumn("q", round(col("x") * lit(1048576.0)).cast("long"))
@@ -467,7 +466,7 @@ object EmbeddingOps {
     graft.Artifacts.face(s"pqEncode:$dir", spark)(
       (0 until PqM).foldLeft(sliced) { (df, m) =>
         df.withColumn(s"c$m", graft.plans.GraftFunctions
-          .graftIvfAssign(spark, s"s$m", bookCents(m))("cell"))
+          .graftIvfAssign(s"s$m", bookCents(m))("cell"))
       }.select(col("vec_id") +: col("v") +:
         (0 until PqM).map(m => col(s"c$m")): _*))
   }
@@ -565,7 +564,7 @@ object EmbeddingOps {
     }
     val encoded1 = (0 until PqM).foldLeft(sliced) { (df, m) =>
       df.withColumn(s"c$m", graft.plans.GraftFunctions
-        .graftIvfAssign(spark, s"s$m", bookCents1(m))("cell"))
+        .graftIvfAssign(s"s$m", bookCents1(m))("cell"))
     }.select(col("vec_id") +: col("v") +:
       (0 until PqM).map(m => col(s"c$m")): _*)
     val q = encoded1.filter(col("vec_id") < 5)
@@ -601,7 +600,7 @@ object EmbeddingOps {
     val cents = pqSeed(spark, dir).map { case (id, v) =>
       (id, v, v.foldLeft(0.0)((a, x) => a + x * x))
     }
-    val asg = graft.plans.GraftFunctions.graftIvfAssign(spark, "v", cents)
+    val asg = graft.plans.GraftFunctions.graftIvfAssign("v", cents)
     val assigned = graft.Artifacts.face(s"ivfPqAssigned:$dir", spark)(
       encoded.withColumn("asg", asg)
         .withColumn("cell", col("asg")("cell"))
@@ -723,7 +722,7 @@ object EmbeddingOps {
     // shared: the pair join reads this frame as BOTH sides
     val assigned = graft.Artifacts.face(s"semDedupAssigned:$dir", spark)(
       e0.withColumn("cell",
-          graft.plans.GraftFunctions.graftIvfAssign(spark, "v", cents)("cell"))
+          graft.plans.GraftFunctions.graftIvfAssign("v", cents)("cell"))
         .withColumn("bucket", lshBucket(col("v"), bitsFor(spark, dir, e0)))
         .withColumn("csim", dot(col("v"), element_at(cVec, col("cell")))
           / (sqrt(col("dot_self")) * sqrt(element_at(cDot, col("cell")))))

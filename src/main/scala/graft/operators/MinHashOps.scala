@@ -123,7 +123,7 @@ object MinHashOps {
   private[graft] def postingsFromGrams(spark: SparkSession,
       docsGrams: DataFrame): DataFrame =
     docsGrams
-      .withColumn("sig", GraftFunctions.graftMinhash(spark, "grams"))
+      .withColumn("sig", GraftFunctions.graftMinhash("grams"))
       .withColumn("bands", bandHashes(col("sig")))
       .select(col("doc_id"), col("lang"),
         explode(array((0 until Bands).map(lit(_)): _*)).as("band_idx"),

@@ -147,8 +147,8 @@ object TextOps {
       .withColumn("fp_md5", md5(col("text").cast("binary")))
       .withColumn("fp64", conv(substring(col("fp_md5"), 1, 15), 16, 10).cast("long"))
       .withColumn("n_shingles",
-        size(GraftFunctions.graftTrigrams(spark, "toks")).cast("long"))
-      .withColumn("fp_roll", GraftFunctions.graftRollHash(spark, "toks"))
+        size(GraftFunctions.graftTrigrams("toks")).cast("long"))
+      .withColumn("fp_roll", GraftFunctions.graftRollHash("toks"))
       .select("doc_id", "fp_md5", "fp64", "n_shingles", "fp_roll")
       .orderBy("doc_id")
 
@@ -450,7 +450,7 @@ object TextOps {
     // presentation sort; embarrassingly parallel at any scale.
     Tables.documentsPar(spark, dir)
       .withColumn("toks", tokens)
-      .withColumn("gs", graft.plans.GraftFunctions.graftGramStats(spark, "toks"))
+      .withColumn("gs", graft.plans.GraftFunctions.graftGramStats("toks"))
       .select(col("doc_id"), col("gs.total_grams").as("total_grams"),
         col("gs.distinct_grams").as("distinct_grams"),
         col("gs.top_gram_cnt").as("top_gram_cnt"))
@@ -1248,7 +1248,7 @@ object TextOps {
     docsIn
       .withColumn("toks", tokens)
       .select(col("doc_id"), col("lang"),
-        GraftFunctions.graftTrigrams(docsIn.sparkSession, "toks").as("grams"))
+        GraftFunctions.graftTrigrams("toks").as("grams"))
 
   /** The (slim) exploded posting rows of both contamination variants,
     * derived from the shared shingle artifact. ITSELF a shared artifact
@@ -1762,7 +1762,7 @@ object TextOps {
       .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(payload)).as("ds"))
       .filter(size(col("ds")) > 1)
-      .select(GraftFunctions.graftPairsGen(spark, "ds"))
+      .select(GraftFunctions.graftPairsGen("ds"))
   }
 
   /** N-gram Jaccard near-duplicate detection, the scalable way: explode
@@ -2596,7 +2596,7 @@ object TextOps {
       .withColumn("n_feat", when(size(col("toks")) < 2, size(col("toks")))
         .otherwise(size(col("toks")) * 2 - 1).cast("long"))
       .withColumn("score_units",
-        graft.plans.GraftFunctions.graftClsScore(docs.sparkSession, "toks")))
+        graft.plans.GraftFunctions.graftClsScore("toks")))
 
   /** The composed built-in form of the classifier — the shape the oracle
     * twin mirrors token-for-token; `ClassifierScoreUnits` must stay a
@@ -2696,7 +2696,7 @@ object TextOps {
     hashEmbedRender(docs
       .withColumn("toks", tokens)
       .withColumn("emb",
-        graft.plans.GraftFunctions.graftHashEmbed(docs.sparkSession, "toks")))
+        graft.plans.GraftFunctions.graftHashEmbed("toks")))
 
   /** The composed built-in form — the shape the oracle twin mirrors
     * token-for-token; `HashEmbedUnits` must stay a drop-in replacement
@@ -2732,7 +2732,7 @@ object TextOps {
     Tables.documentsPar(spark, dir)
       .withColumn("toks", tokens)
       .select(col("doc_id"),
-        graft.plans.GraftFunctions.graftHashEmbed(spark, "toks")
+        graft.plans.GraftFunctions.graftHashEmbed("toks")
           .cast("array<double>").as("vec"))
 
   /** The composed text→vector→search query (`emb_hash_topk`): cosine
@@ -2756,7 +2756,7 @@ object TextOps {
       Tables.documentsPar(spark, dir)
         .withColumn("toks", tokens)
         .select(col("doc_id"),
-          graft.plans.GraftFunctions.graftHashEmbed(spark, "toks").as("emb"))
+          graft.plans.GraftFunctions.graftHashEmbed("toks").as("emb"))
         .withColumn("norm_sq", aggregate(col("emb"), lit(0L), (a, x) => a + x * x))
         .filter(col("norm_sq") > 0L)
         .withColumn("is_eval", sampleBucket === 0))
@@ -2777,7 +2777,7 @@ object TextOps {
       // per candidate and was the whole query (the classifier lesson;
       // parity pinned in ExpressionParitySpec)
       .withColumn("dot",
-        graft.plans.GraftFunctions.graftDotLong(spark, "qemb", "cemb"))
+        graft.plans.GraftFunctions.graftDotLong("qemb", "cemb"))
       .withColumn("sim", col("dot").cast("double") /
         (sqrt(col("q_nsq").cast("double")) * sqrt(col("c_nsq").cast("double"))))
       // SLIM before the window: the top-k exchange repartitions every
@@ -2802,7 +2802,7 @@ object TextOps {
     val base = Tables.documentsPar(spark, dir)
       .withColumn("toks", tokens)
       .select(col("doc_id"),
-        graft.plans.GraftFunctions.graftHashEmbed(spark, "toks").as("emb"))
+        graft.plans.GraftFunctions.graftHashEmbed("toks").as("emb"))
       .withColumn("is_eval", sampleBucket === 0)
     val q = base.filter(col("is_eval"))
       .select(col("doc_id").as("q_id"), col("emb").as("qemb"))
@@ -2812,7 +2812,7 @@ object TextOps {
       if (composedDot)
         aggregate(zip_with(col("qemb"), col("cemb"), (a, b) => a * b),
           lit(0L), (s, x) => s + x)
-      else graft.plans.GraftFunctions.graftDotLong(spark, "qemb", "cemb")
+      else graft.plans.GraftFunctions.graftDotLong("qemb", "cemb")
     c.join(broadcast(q)).select(col("q_id"), col("c_id"), dot.as("dot"))
   }
 
@@ -2851,7 +2851,7 @@ object TextOps {
         .map(r => (r.getSeq[Long](0), r.getLong(1))).toIndexedSeq
     }
     val asg = graft.plans.GraftFunctions.graftHashIvfAssign(
-      spark, "emb", cents.map(_._1), cents.map(_._2))
+      "emb", cents.map(_._1), cents.map(_._2))
     val c = cand
       .withColumn("cell", asg.getField("cell"))
       .select(col("doc_id").as("c_id"), col("emb").as("cemb"),
@@ -2865,7 +2865,7 @@ object TextOps {
       .partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))
     c.join(broadcast(q), col("cell") === col("probe"))
       .withColumn("dot",
-        graft.plans.GraftFunctions.graftDotLong(spark, "qemb", "cemb"))
+        graft.plans.GraftFunctions.graftDotLong("qemb", "cemb"))
       .withColumn("sim", col("dot").cast("double") /
         (sqrt(col("q_nsq").cast("double")) * sqrt(col("c_nsq").cast("double"))))
       // slim before the rank machinery — the emb_hash_topk lesson

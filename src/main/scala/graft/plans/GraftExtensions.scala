@@ -1,18 +1,25 @@
 package graft.plans
 
-import graft.functions.{ArrayPairs, ClassifierScoreUnits, GramStats, HashEmbedUnits, LongDot, MinHashSignature, PairsGenerator, RollingHashUnits, TrigramShingles}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.expr
+import graft.functions.{ArrayPairs, ClassifierScoreUnits, GramStats, HashEmbedUnits, HashIvfAssignTop2, IvfAssignTop2, LongDot, MinHashSignature, PairsGenerator, RollingHashUnits, TrigramShingles}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registration of graft's custom Catalyst expressions and the LAZY
   * query-view resolver.
   *
-  * Two entry points, same registry:
+  * `GraftFunctions.table` is the single source of the SQL function
+  * names: each (name, class, builder) entry is written once there and
+  * read by both entry points —
   *  - `GraftExtensions` for `--conf spark.sql.extensions=graft.plans.
   *    GraftExtensions` (the production path — every session gets the
   *    functions at build time);
   *  - `GraftFunctions.register(spark)` for imperative registration
-  *    (tests, notebooks) — idempotent.
+  *    (`GraftCatalog.registerAll`, tests, notebooks) — idempotent: it
+  *    skips names the session already has.
+  * The DataFrame column faces (`GraftFunctions.graftTrigrams` …) build
+  * their expressions directly and need neither entry point.
   *
   * Besides the scalar expressions, one analyzer RESOLUTION rule is
   * injected: `LazyGraftViews` resolves `graft_<query>` relations on
@@ -26,60 +33,7 @@ import org.apache.spark.sql.functions.expr
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectResolutionRule(session => new LazyGraftViews(session))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_trigrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TrigramShingles].getName, "graft_trigrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TrigramShingles(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_pairs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ArrayPairs].getName, "graft_pairs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ArrayPairs(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashSignature].getName, "graft_minhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSignature(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_pairs_gen"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PairsGenerator].getName, "graft_pairs_gen"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PairsGenerator(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gram_stats"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[GramStats].getName, "graft_gram_stats"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GramStats(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cls_score"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ClassifierScoreUnits].getName, "graft_cls_score"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ClassifierScoreUnits(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hash_embed"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[HashEmbedUnits].getName, "graft_hash_embed"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HashEmbedUnits(exprs.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot_long"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LongDot].getName, "graft_dot_long"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LongDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_roll_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RollingHashUnits].getName, "graft_roll_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RollingHashUnits(exprs.head)))
+    GraftFunctions.descriptions.foreach(e.injectFunction)
   }
 }
 
@@ -118,84 +72,54 @@ class LazyGraftViews(session: SparkSession)
 }
 
 object GraftFunctions {
+  /** Every graft SQL function: (name, expression class, builder). */
+  val table: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_trigrams", classOf[TrigramShingles], e => TrigramShingles(e.head)),
+    ("graft_pairs", classOf[ArrayPairs], e => ArrayPairs(e.head)),
+    ("graft_minhash", classOf[MinHashSignature], e => MinHashSignature(e.head)),
+    ("graft_pairs_gen", classOf[PairsGenerator], e => PairsGenerator(e.head)),
+    ("graft_gram_stats", classOf[GramStats], e => GramStats(e.head)),
+    ("graft_cls_score", classOf[ClassifierScoreUnits], e => ClassifierScoreUnits(e.head)),
+    ("graft_hash_embed", classOf[HashEmbedUnits], e => HashEmbedUnits(e.head)),
+    ("graft_dot_long", classOf[LongDot], e => LongDot(e.head, e(1))),
+    ("graft_roll_hash", classOf[RollingHashUnits], e => RollingHashUnits(e.head)))
+
+  private[plans] val descriptions =
+    table.map { case (name, cls, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
+
+  /** Register every `table` entry the session lacks (an extension-built
+    * session already has them all, so this is a no-op there). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigrams", exprs => TrigramShingles(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSignature(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pairs", exprs => ArrayPairs(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pairs_gen", exprs => PairsGenerator(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cls_score", exprs => ClassifierScoreUnits(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash_embed", exprs => HashEmbedUnits(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_long", exprs => LongDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_roll_hash", exprs => RollingHashUnits(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_stats", exprs => GramStats(exprs.head), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    descriptions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 
-  /** column faces over named columns (register first, then `expr`) */
-  def graftTrigrams(spark: SparkSession, tokensCol: String): Column = {
-    register(spark); expr(s"graft_trigrams($tokensCol)")
-  }
-  def graftMinhash(spark: SparkSession, gramsCol: String): Column = {
-    register(spark); expr(s"graft_minhash($gramsCol)")
-  }
-  def graftPairs(spark: SparkSession, arrCol: String): Column = {
-    register(spark); expr(s"graft_pairs($arrCol)")
-  }
+  private def face(e: Expression): Column = GraftSqlBridge.column(e)
+  private def at(name: String): Expression = UnresolvedAttribute.quoted(name)
+
+  /** column faces over named columns */
+  def graftTrigrams(tokensCol: String): Column = face(TrigramShingles(at(tokensCol)))
+  def graftMinhash(gramsCol: String): Column = face(MinHashSignature(at(gramsCol)))
   /** generator form: select(...) plans a Generate emitting (l, r) rows */
-  def graftPairsGen(spark: SparkSession, arrCol: String): Column = {
-    register(spark); expr(s"graft_pairs_gen($arrCol)")
-  }
-  def graftHashEmbed(spark: SparkSession, tokensCol: String): Column = {
-    register(spark); expr(s"graft_hash_embed($tokensCol)")
-  }
-  def graftDotLong(spark: SparkSession, aCol: String, bCol: String): Column = {
-    register(spark); expr(s"graft_dot_long($aCol, $bCol)")
-  }
-  def graftClsScore(spark: SparkSession, tokensCol: String): Column = {
-    register(spark); expr(s"graft_cls_score($tokensCol)")
-  }
-  def graftRollHash(spark: SparkSession, tokensCol: String): Column = {
-    register(spark); expr(s"graft_roll_hash($tokensCol)")
-  }
-  def graftGramStats(spark: SparkSession, tokensCol: String): Column = {
-    register(spark); expr(s"graft_gram_stats($tokensCol)")
-  }
+  def graftPairsGen(arrCol: String): Column = face(PairsGenerator(at(arrCol)))
+  def graftHashEmbed(tokensCol: String): Column = face(HashEmbedUnits(at(tokensCol)))
+  def graftDotLong(aCol: String, bCol: String): Column =
+    face(LongDot(at(aCol), at(bCol)))
+  def graftClsScore(tokensCol: String): Column = face(ClassifierScoreUnits(at(tokensCol)))
+  def graftRollHash(tokensCol: String): Column = face(RollingHashUnits(at(tokensCol)))
+  def graftGramStats(tokensCol: String): Column = face(GramStats(at(tokensCol)))
 
-  /** IVF top-2 centroid assignment over plan-time centroid constants.
-    * The centroids are collected driver state, not SQL-literal-able
-    * args, so the registry BUILDER closes over them — registered under
-    * a name keyed by the centroid set (idempotent per set; a refined
-    * set registers its own name). */
-  def graftIvfAssign(spark: SparkSession, vCol: String,
-      cents: Seq[(Long, Seq[Double], Double)]): Column = {
-    val name = s"graft_ivf_assign_${java.lang.Integer.toHexString(cents.hashCode)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => graft.functions.IvfAssignTop2(exprs.head,
-        cents.map(_._1), cents.map(_._2), cents.map(_._3)),
-      "built-in")
-    expr(s"$name($vCol)")
-  }
+  /** IVF top-2 centroid assignment over plan-time centroid constants
+    * (collected driver state, held by the expression itself). */
+  def graftIvfAssign(vCol: String, cents: Seq[(Long, Seq[Double], Double)]): Column =
+    face(IvfAssignTop2(at(vCol), cents.map(_._1), cents.map(_._2), cents.map(_._3)))
 
   /** Integer-space coarse assignment for the hashed-document ANN
-    * (emb_hash_ann) — same closure-registration pattern as
-    * graftIvfAssign, BIGINT end to end. */
-  def graftHashIvfAssign(spark: SparkSession, vCol: String,
-      cents: Seq[Seq[Long]], cnorms: Seq[Long]): Column = {
-    val name =
-      s"graft_hash_ivf_assign_${java.lang.Integer.toHexString(cents.hashCode)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => graft.functions.HashIvfAssignTop2(exprs.head, cents, cnorms),
-      "built-in")
-    expr(s"$name($vCol)")
-  }
+    * (emb_hash_ann) — graftIvfAssign's BIGINT twin. */
+  def graftHashIvfAssign(vCol: String, cents: Seq[Seq[Long]], cnorms: Seq[Long]): Column =
+    face(HashIvfAssignTop2(at(vCol), cents, cnorms))
 }

@@ -288,7 +288,7 @@ object IngestPipeline {
       afterStage("substr")
       val vecs = survivors.withColumn("toks", TextOps.tokens)
         .select(col("doc_id").as("vec_id"),
-          graft.plans.GraftFunctions.graftHashEmbed(spark, "toks")
+          graft.plans.GraftFunctions.graftHashEmbed("toks")
             .cast("array<double>").as("embedding"))
       // first non-empty survivor batch seeds the coarse quantizer (the
       // deterministic lowest-id init every IVF face uses); training is

@@ -6,9 +6,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   TTLConfig, TimeMode, TimerValues}
 
 /** The transformWithState (arbitrary-state v2, Spark 4.x) face of the
-  * windowed signal aggregate — third implementation of SURVEY §2.5 W3
-  * beside the typed `Aggregator` (Catalyst-planned partial aggregation,
-  * the default) and `flatMapGroupsWithState` (StatefulSignals).
+  * windowed signal aggregate (SURVEY §2.5 W3), beside the typed
+  * `Aggregator` (Catalyst-planned partial aggregation, the default).
   *
   * Why carry it: the reference's processor is an arbitrary-state RocksDB
   * program (SignalTopology.kt:31-37 state store + SignalAggregator.kt
@@ -25,22 +24,31 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * (the reason this API exists; with the blob-state APIs every arrival
   * deserializes+reserializes the full AggState).
   *
-  * Semantics match StatefulSignals exactly: per-batch fold in (tsMs,
-  * seq) order, update-mode emission of windows with >= 2 timeframes
-  * (W7), state dropped by an event-time timer when the watermark passes
-  * window end (no-grace, SURVEY §2.10). Final per-window values are
-  * batch-size-invariant; TwsSignalsSpec asserts bit-parity with the
-  * one-shot Aggregator fold.
+  * Semantics: per-batch fold in (tsMs, seq) order — the deterministic
+  * stand-in for the reference's arrival order (SURVEY §7.5(1)) —
+  * update-mode emission of windows with >= 2 timeframes (W7), state
+  * dropped by an event-time timer when the watermark passes window end
+  * (no-grace, SURVEY §2.10). Emission history depends on batch
+  * boundaries, but final per-window values are batch-size-invariant;
+  * TwsSignalsSpec asserts bit-parity with the one-shot Aggregator fold.
   */
 object TwsSignals {
 
-  val WindowMs: Long = StatefulSignals.WindowMs
+  case class WindowUpdate(symbol: String, w_start: Long, n_tf: Long,
+    signal_count: Long, balance: Long, alignment: Double, avg_price: Double,
+    avg_vol: Double, qty_basis: Double, closed: Boolean)
 
-  /** Processor keyed by (symbol, w_start); input rows are
-    * StatefulSignals.KeyedSig, output rows StatefulSignals.WindowUpdate. */
+  /** Input row — carries the watermarked event_time column. */
+  case class KeyedSig(symbol: String, timeframe: String, side: String,
+    priceC: Long, qtyC: Long, tsMs: Long, seq: Long, w_start: Long,
+    event_time: java.sql.Timestamp)
+
+  val WindowMs: Long = 5L * 60L * 1000L
+
+  /** Processor keyed by (symbol, w_start); input rows are KeyedSig,
+    * output rows WindowUpdate. */
   class WindowProcessor
-      extends StatefulProcessor[(String, Long), StatefulSignals.KeyedSig,
-        StatefulSignals.WindowUpdate] {
+      extends StatefulProcessor[(String, Long), KeyedSig, WindowUpdate] {
 
     @transient private var tfState:
         org.apache.spark.sql.streaming.MapState[String, TfState] = _
@@ -61,8 +69,8 @@ object TwsSignals {
 
     override def handleInputRows(
         key: (String, Long),
-        rows: Iterator[StatefulSignals.KeyedSig],
-        timerValues: TimerValues): Iterator[StatefulSignals.WindowUpdate] = {
+        rows: Iterator[KeyedSig],
+        timerValues: TimerValues): Iterator[WindowUpdate] = {
       val sorted = rows.toSeq.sortBy(s => (s.tsMs, s.seq))
       sorted.foreach { k =>
         val tf = if (tfState.containsKey(k.timeframe)) tfState.getValue(k.timeframe)
@@ -80,16 +88,16 @@ object TwsSignals {
       val st = AggState(tfState.iterator().map { case (k2, v) => k2 -> v }.toMap)
       val r = SignalAggregator.finish(st)
       if (r.n_tf >= 2)
-        Iterator.single(StatefulSignals.WindowUpdate(key._1, key._2, r.n_tf,
-          r.signal_count, r.balance, r.alignment, r.avg_price, r.avg_vol,
-          r.qty_basis, closed = false))
+        Iterator.single(WindowUpdate(key._1, key._2, r.n_tf, r.signal_count,
+          r.balance, r.alignment, r.avg_price, r.avg_vol, r.qty_basis,
+          closed = false))
       else Iterator.empty
     }
 
     override def handleExpiredTimer(
         key: (String, Long),
         timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[StatefulSignals.WindowUpdate] = {
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[WindowUpdate] = {
       tfState.clear()
       timerSet.clear()
       Iterator.empty
@@ -100,8 +108,7 @@ object TwsSignals {
     * updates via transformWithState. Streaming-only by API contract —
     * requires RocksDBStateStoreProvider (caller sets
     * spark.sql.streaming.stateStore.providerClass). */
-  def windowUpdates(spark: SparkSession, parsed: DataFrame)
-      : Dataset[StatefulSignals.WindowUpdate] = {
+  def windowUpdates(spark: SparkSession, parsed: DataFrame): Dataset[WindowUpdate] = {
     import spark.implicits._
     val withW = parsed
       .withColumn("w_start", expr(s"(tsMs div ${WindowMs}L) * ${WindowMs}L"))
@@ -110,9 +117,9 @@ object TwsSignals {
       else withW
     src.select(col("symbol"), col("timeframe"), col("side"), col("priceC"),
         col("qtyC"), col("tsMs"), col("seq"), col("w_start"), col("event_time"))
-      .as[StatefulSignals.KeyedSig]
+      .as[KeyedSig]
       .groupByKey(k => (k.symbol, k.w_start))
       .transformWithState(new WindowProcessor, TimeMode.EventTime(),
-        OutputMode.Update(), Encoders.product[StatefulSignals.WindowUpdate])
+        OutputMode.Update(), Encoders.product[WindowUpdate])
   }
 }

@@ -170,7 +170,7 @@ object VectorIndex {
     val assigned0 = normed(batch)
       .dropDuplicates("vec_id")
       .withColumn("cell", graft.plans.GraftFunctions
-        .graftIvfAssign(spark, "v", cents)("cell"))
+        .graftIvfAssign("v", cents)("cell"))
       // a vector whose dimensionality mismatches the centroids assigns
       // cell = NULL (IvfAssignTop2's contract); in the streaming entry
       // one such row would fail the touched-cells collect, the
@@ -247,7 +247,7 @@ object VectorIndex {
         col("dot_self").as("q_dot"))
     val q = (if (nprobe == 2) {
         val asg: Column = graft.plans.GraftFunctions
-          .graftIvfAssign(spark, "qv", cents)
+          .graftIvfAssign("qv", cents)
         qBase
           .withColumn("asg", asg)
           .withColumn("probe",
@@ -418,7 +418,7 @@ object VectorIndex {
       val dim = cents.head._2.length
       val means = cur
         .withColumn("cell", graft.plans.GraftFunctions
-          .graftIvfAssign(spark, "v", cents)("cell"))
+          .graftIvfAssign("v", cents)("cell"))
         .filter(col("cell").isNotNull)
         .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy("cell", "i").agg(avg(col("x")).as("m"))
@@ -444,7 +444,7 @@ object VectorIndex {
     cents.toDF("cid", "v", "dot_self")
       .coalesce(1).write.parquet(s"$cLive.tmp")
     cur.withColumn("cell", graft.plans.GraftFunctions
-        .graftIvfAssign(spark, "v", cents)("cell"))
+        .graftIvfAssign("v", cents)("cell"))
       .filter(col("cell").isNotNull)
       .select("cell", "vec_id", "v", "dot_self")
       .repartition(col("cell"))

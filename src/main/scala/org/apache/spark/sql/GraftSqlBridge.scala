@@ -5,9 +5,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-/** Bridge for graft.Artifacts into two `private[sql]` seams (r17
+/** Bridge into `private[sql]` seams: two for graft.Artifacts (r17
   * optimization round; see Artifacts.shared's scaladoc for the measured
-  * rationale).
+  * rationale) and one for graft.plans' column faces.
   *
   * Why it exists: a shared derived artifact wants BOTH
   *  (a) lineage truncation — `.cache()` keeps the artifact's entire
@@ -28,6 +28,10 @@ import org.apache.spark.storage.StorageLevel
   * touching the RDD (the `internalCreateDataFrame` seam — the public
   * `createDataFrame` faces force row conversion or partition
   * resolution).
+  *
+  * [[GraftSqlBridge.column]] wraps a Catalyst expression as a Column
+  * (`classic.ExpressionUtils`), so a face needs no function registry
+  * and no SQL parser.
   */
 object GraftSqlBridge {
   /** A leaf DataFrame over `rdd` with `schema` — no jobs, no partition
@@ -36,6 +40,10 @@ object GraftSqlBridge {
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** A Column over a Catalyst expression (graft's function faces). */
+  def column(e: catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
 }
 
 /** Lazily builds (and local-checkpoints) the target RDD of a shared

@@ -20,7 +20,7 @@ class MinHashRecallSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
       .withColumn("toks", TextOps.tokens)
       .select(col("doc_id"), col("lang"),
-        GraftFunctions.graftTrigrams(spark, "toks").as("grams"))
+        GraftFunctions.graftTrigrams("toks").as("grams"))
       .filter(size(col("grams")) > 0)
 
     // exact ground truth: all same-lang pairs (test-scale only)

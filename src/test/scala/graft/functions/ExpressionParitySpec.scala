@@ -14,7 +14,7 @@ class ExpressionParitySpec extends SparkSpec {
     val df = Tables.documents(spark, sf())
       .withColumn("toks", TextOps.tokens)
       .withColumn("composed", TextOps.wordTrigrams(col("toks")))
-      .withColumn("custom", GraftFunctions.graftTrigrams(spark, "toks"))
+      .withColumn("custom", GraftFunctions.graftTrigrams("toks"))
     assert(df.filter(not(col("composed") <=> col("custom"))).count() == 0)
   }
 
@@ -29,7 +29,7 @@ class ExpressionParitySpec extends SparkSpec {
         count(lit(1)).as("distinct_grams"),
         max("cnt").as("top_gram_cnt"))
     val custom = df
-      .withColumn("gs", GraftFunctions.graftGramStats(spark, "toks"))
+      .withColumn("gs", GraftFunctions.graftGramStats("toks"))
       .select(col("doc_id"), col("gs.total_grams").as("c_total"),
         col("gs.distinct_grams").as("c_distinct"),
         col("gs.top_gram_cnt").as("c_top"))
@@ -49,7 +49,7 @@ class ExpressionParitySpec extends SparkSpec {
       .filter(size(col("grams")) > 0)
       .withColumn("ids", MinHashOps.gramIds(col("grams")))
       .withColumn("composed", MinHashOps.signature(col("ids")))
-      .withColumn("custom", GraftFunctions.graftMinhash(spark, "grams"))
+      .withColumn("custom", GraftFunctions.graftMinhash("grams"))
     assert(df.filter(not(col("composed") <=> col("custom"))).count() == 0)
   }
 
@@ -69,14 +69,14 @@ class ExpressionParitySpec extends SparkSpec {
     val both = e
       .withColumn("c_cell", element_at(ranked, 1)("cid"))
       .withColumn("c_cell2", element_at(ranked, 2)("cid"))
-      .withColumn("asg", GraftFunctions.graftIvfAssign(spark, "v", cents))
+      .withColumn("asg", GraftFunctions.graftIvfAssign("v", cents))
     assert(both.filter(
       not(col("c_cell") <=> col("asg.cell")) ||
         not(col("c_cell2") <=> col("asg.cell2"))).count() == 0)
     // degenerate single-centroid case: composed element_at(…, 2) yields
     // null; the expression must too
     val one = both.withColumn("a1",
-      GraftFunctions.graftIvfAssign(spark, "v", cents.take(1)))
+      GraftFunctions.graftIvfAssign("v", cents.take(1)))
     assert(one.filter(col("a1.cell2").isNotNull).count() == 0)
     assert(one.filter(col("a1.cell") =!= cents.head._1).count() == 0)
   }
@@ -205,7 +205,7 @@ class ExpressionParitySpec extends SparkSpec {
     val base = Tables.documents(spark, sf())
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"),
-        GraftFunctions.graftHashEmbed(spark, "toks").as("emb"))
+        GraftFunctions.graftHashEmbed("toks").as("emb"))
       .limit(50)
     val q = base.select(col("doc_id").as("qid"), col("emb").as("qemb"))
     val c = base.select(col("doc_id").as("cid"), col("emb").as("cemb"))
@@ -215,13 +215,5 @@ class ExpressionParitySpec extends SparkSpec {
         aggregate(zip_with(col("qemb"), col("cemb"), (a, b) => a * b),
           lit(0L), (s, x) => s + x))
     assert(x.filter(col("custom") =!= col("composed")).isEmpty)
-  }
-
-  test("SQL registration via extensions entry point") {
-    new graft.plans.GraftExtensions() // construct: the --conf path exists
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT graft_trigrams(array('a','b','c','b','c','d')) AS g").collect()
-    assert(r.head.getSeq[String](0) == Seq("a b c", "b c b", "c b c", "b c d"))
   }
 }

@@ -107,7 +107,7 @@ class IngestPipelineSpec extends SparkSpec {
     val toks = graft.operators.TextOps.tokens
     val q = b1.filter(col("doc_id") === 1).withColumn("toks", toks)
       .select(col("doc_id").as("vec_id"),
-        graft.plans.GraftFunctions.graftHashEmbed(spark, "toks")
+        graft.plans.GraftFunctions.graftHashEmbed("toks")
           .cast("array<double>").as("embedding"))
     val served = VectorIndex.search(spark, IngestPipeline.indexDir(root), q)
       .collect()
@@ -820,7 +820,7 @@ class IngestPipelineSpec extends SparkSpec {
       .parquet(IngestPipeline.corpusDir(root))
       .withColumn("toks", graft.operators.TextOps.tokens)
       .select(col("doc_id").as("vec_id"),
-        graft.plans.GraftFunctions.graftHashEmbed(spark, "toks")
+        graft.plans.GraftFunctions.graftHashEmbed("toks")
           .cast("array<double>").as("embedding"))
     val wantNbrs = IngestPipeline.searchCorpus(spark, ref, queriesOf(ref),
       lit(true)).select("vec_id").as[Long].collect().toSet
@@ -892,7 +892,7 @@ class IngestPipelineSpec extends SparkSpec {
     assert(r.admitted == 6L, s"fixture must fully admit: $r")
     val qs = docs.withColumn("toks", graft.operators.TextOps.tokens)
       .select(col("doc_id").as("vec_id"),
-        graft.plans.GraftFunctions.graftHashEmbed(spark, "toks")
+        graft.plans.GraftFunctions.graftHashEmbed("toks")
           .cast("array<double>").as("embedding"))
       .filter(col("vec_id") < 2)
     val res = IngestPipeline.searchCorpus(spark, root, qs,
