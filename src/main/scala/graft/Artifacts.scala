@@ -1,150 +1,96 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DeferredCheckpointRDD, GraftSqlBridge}
 
-/** Registry for the handful of CACHED derived frames the query library
-  * shares across queries (normalized embeddings, shingle/posting tables
-  * — the "materialized artifact" pattern, see BASELINE.md).
+/** The session's shared artifacts — built once, reused by every query
+  * and bench rep that asks again, released together by `unpersistAll`
+  * (the "materialized artifact" pattern, see BASELINE.md). ONE map,
+  * keyed by (name, owner):
+  *  - `memo` stores driver values (a trained vocabulary, a bloom
+  *    filter's broadcast) and plain frames (the memoized table
+  *    relations);
+  *  - `face` stores a frame materialized as a deferred local checkpoint
+  *    with a columnar cache on top.
   *
-  * Lifecycle (ADVICE r2): `.cache()` alone never unpersists, so a long
-  * multi-query session would accumulate every derivation for its
-  * lifetime. Every shared cache now registers here and harness mains
-  * (Bench, Verify) call `unpersistAll()` when the run finishes.
+  * KEY RULE. The name carries every build parameter that changes the
+  * result for the same owner (`s"bpe-merges:$dir:$k"`). The owner is
+  * the input frame the artifact derives from, or the `SparkSession` for
+  * artifacts derived from a table directory. The owner leg compares by
+  * object identity (Dataset and SparkSession do not override equals), so
+  * two live inputs never collide, and the query path keeps its inputs
+  * stable because the table relations are themselves memoized per
+  * (dir, session). A new input object gets a new artifact.
   *
-  * MID-run the caches stay resident on purpose — the four ANN/near-dup
-  * queries share ONE normalized-embedding materialization, which is the
-  * point — and that reliance is safe: DataFrame.cache() is
-  * MEMORY_AND_DISK, so under pressure Spark's BlockManager evicts LRU
-  * blocks to disk (or drops them and recomputes) rather than OOM-ing.
-  * The registry bounds the tail, not the steady state.
-  */
+  * OWNER LIFETIME. The map holds every owner strongly until
+  * `unpersistAll`: the session, or an input frame and its plan, lives as
+  * long as the artifacts built on it. Harness mains (Bench, Verify) call
+  * `unpersistAll` when the run ends. Mid-run the entries stay resident
+  * on purpose — sharing them is the point — and the persisted rows are
+  * MEMORY_AND_DISK, so memory pressure spills blocks instead of OOM-ing.
+  *
+  * STALENESS. Keys name input paths, not file versions: rewriting the
+  * files under a path within one session keeps serving the artifact
+  * built from the old files until `unpersistAll` (ArtifactFaceSpec pins
+  * it).
+  *
+  * LOST BLOCKS. A face truncates its lineage (r17, guide §5): `.cache()`
+  * alone kept the whole build plan in every consumer task's closure,
+  * and JFR showed >30% of warm executor samples Java-deserializing those
+  * catalyst trees. The local checkpoint makes the closure a leaf
+  * reference; the columnar cache on top restores column pruning for the
+  * fat array payloads (doc_curate 1.11 → 1.63 s without it) and stores
+  * the rows serialized. The trade: a lost checkpoint block fails the
+  * consuming job instead of recomputing it (ArtifactFaceSpec pins the
+  * failure and the rebuild after `unpersistAll`) — for a session-scoped
+  * derivative a production pipeline would materialize to storage, the
+  * right side of the trade.
+  *
+  * Building a face runs no job: `DeferredCheckpointRDD` defers the
+  * build plan's `toRdd` to the first consuming action (GraftSqlBridge;
+  * GraftCatalogSpec pins zero-job view registration). A cached face
+  * also skips its build thunk entirely, which is what took driver plan
+  * construction from 5.6 to 3.2 s per bench pass (r17 session 4). */
 object Artifacts {
-  private val registered =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-  private val memos = scala.collection.concurrent.TrieMap.empty[String, Any]
-  private val ckpts = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Materialize a shared derived frame with its LINEAGE TRUNCATED and
-    * track it for end-of-run release.
-    *
-    * r17 (optimization round, guide §5 "localCheckpoint is a cheaper way
-    * to cut lineage" / §3.3 "materialising an intermediate truncates the
-    * plan"): the former `.cache()` kept the artifact's ENTIRE build plan
-    * in the RDD lineage for fault-tolerant recompute, so every task of
-    * every consumer stage shipped and Java-deserialized that plan — JFR
-    * showed >30% of warm executor samples inside
-    * ObjectInputStream.readObject reconstructing catalyst trees, ~100 ms
-    * of pure deserialization per task for the wide artifacts. A
-    * lazily-materialized localCheckpoint persists the same rows
-    * (MEMORY_AND_DISK, spills under pressure exactly like cache) but
-    * consumer task closures now carry a leaf RDD reference instead of
-    * the build plan — measured 1.06 → 0.88 s warm on the simhash sweep.
-    * The trade (also the guide's): a lost partition fails the job
-    * instead of recomputing; for a session-scoped derived artifact that
-    * a production pipeline would materialize to storage anyway, that is
-    * the right side of the trade.
-    *
-    * MEMOIZED per (session, canonical plan): CacheManager used to dedup
-    * repeated `.cache()` calls on identical plans; a checkpoint has no
-    * such registry, so without the memo every bench rep would
-    * re-materialize the artifact. The memo also returns the SAME Dataset
-    * object to every consumer, so per-rep plan construction stops
-    * re-analyzing the artifact's build subtree. Staleness semantics are
-    * unchanged from the cache (keys embed the source root paths, not
-    * file listings). */
-  def shared(df: DataFrame): DataFrame = {
-    val key = System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      df.schema.map(f => f.name + ":" + f.dataType.sql).mkString(",")
-    ckpts.getOrElseUpdate(key, {
-      // checkpoint + columnar cache ON TOP (measured, r17): the
-      // checkpoint alone made slim-payload artifacts much cheaper to
-      // consume (task closures), but artifacts with fat array payloads
-      // (gram tables, postings) lost the columnar cache's COLUMN
-      // PRUNING — consumers projecting two scalars re-iterated full
-      // rows with their arrays (doc_curate 1.11 → 1.63 s). The columnar
-      // cache over the truncated LogicalRDD restores pruning while the
-      // closure stays a leaf reference. The row layer stores SERIALIZED
-      // (compact bytes, few live objects — deserialized rows doubled
-      // live-object count and taxed every query with GC; DISK_ONLY
-      // pushed the cold phase into serialize+IO, cold_value 36 → 127 s),
-      // the local-session equivalent of the storage materialization a
-      // production pipeline would use.
-      //
-      // DEFERRED build (GraftSqlBridge.deferredDataset): a direct
-      // Dataset.localCheckpoint(eager = false) calls queryExecution.toRdd
-      // at CONSTRUCTION, which materializes an adaptive plan's
-      // intermediate stages (and any plan's broadcast builds) — merely
-      // constructing a query would run jobs, breaking the library's
-      // zero-job view-registration contract (GraftCatalogSpec). The
-      // DeferredCheckpointRDD defers toRdd to the first DAG submission,
-      // inside a real action, where the build keeps AQE.
-      val cp = org.apache.spark.sql.GraftSqlBridge.deferredDataset(
-        df.sparkSession,
-        new org.apache.spark.sql.DeferredCheckpointRDD(
-          df.sparkSession, () => df.queryExecution.toRdd),
-        df.schema).cache()
-      registered.add(cp)
-      cp
-    })
+  /** A face entry: the frame consumers read and the checkpoint under
+    * its cache — the two layers `unpersistAll` releases. */
+  private final case class Face(df: DataFrame, ckpt: DeferredCheckpointRDD) {
+    def release(): Unit = {
+      df.unpersist(blocking = false)
+      ckpt.releaseTarget()
+    }
   }
 
-  /** Memoize a DRIVER-side derived artifact — e.g. the decontamination
-    * bloom filter's broadcast — under an explicit key (callers key by
-    * session + input dir). Same lifecycle as the cached frames: built
-    * once, reused across queries and bench reps, released by
-    * unpersistAll. */
-  def memo[T](key: String)(build: => T): T =
-    memos.getOrElseUpdate(key, build).asInstanceOf[T]
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[(String, AnyRef), Any]
 
-  private val faces =
-    scala.collection.concurrent.TrieMap.empty[(String, AnyRef), DataFrame]
+  /** The value stored under (name, owner), built by `build` on the first
+    * call. Concurrent first calls may both build; one value is kept. */
+  def memo[T](name: String, owner: AnyRef)(build: => T): T =
+    entries.getOrElseUpdate((name, owner), build).asInstanceOf[T]
 
-  /** [[shared]] behind an EXPLICIT face key (r17 session 4, guide §1.2 —
-    * here per-REP driver work): the semanticHash memo inside `shared`
-    * needs the artifact's ANALYZED build tree, so every repeated caller
-    * still constructed and analyzed the whole subtree just to find the
-    * existing checkpoint — measured 5.6 s of pure driver-side plan
-    * construction per bench pass, concentrated in the artifact-backed
-    * queries. A face key skips the rebuild: the by-name `build` is never
-    * evaluated once the face is resolved.
-    *
-    * Key = (name+parameters, input REFERENCE). The reference leg uses
-    * object identity (Dataset/SparkSession don't override equals), so
-    *  - two different input frames can never collide (unlike an
-    *    identityHashCode string, which the JVM may reuse after GC and
-    *    which is not unique between live objects), and
-    *  - the map holds the input strongly for the session, the same
-    *    lifetime the memoized Tables relations already have.
-    * Correctness burden is the NAME leg: it must carry every build
-    * parameter that changes the plan for the same input. Query-path
-    * inputs are themselves memoized per (session, dir), so reps hit the
-    * same reference; ad-hoc callers (tests) get one artifact per frame
-    * object, exactly the semantics `shared`'s plan-hash memo gave them. */
-  def face(key: String, input: AnyRef)(build: => DataFrame): DataFrame =
-    faces.getOrElseUpdate((key, input), shared(build))
+  /** `build`'s rows as a shared artifact under (name, owner): a deferred
+    * local checkpoint with a columnar cache on top. */
+  def face(name: String, owner: AnyRef)(build: => DataFrame): DataFrame = {
+    var mine: Face = null
+    val kept = memo(name, owner) { mine = checkpointed(build); mine }
+    if (mine != null && (mine ne kept)) mine.release() // lost a race
+    kept.df
+  }
 
-  /** Release every tracked cache (idempotent; safe on dead sessions). */
+  private def checkpointed(df: DataFrame): Face = {
+    val ckpt = new DeferredCheckpointRDD(
+      df.sparkSession, () => df.queryExecution.toRdd)
+    Face(GraftSqlBridge.deferredDataset(df.sparkSession, ckpt, df.schema)
+      .cache(), ckpt)
+  }
+
+  /** Release every face's cache and checkpoint and forget every entry
+    * (idempotent; safe on dead sessions). */
   def unpersistAll(): Unit = {
-    val it = registered.iterator()
-    while (it.hasNext) {
-      val d = it.next()
-      try d.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-      // checkpointed artifacts persist their internal RDD, which
-      // Dataset.unpersist does not reach — release it via the LogicalRDD
-      try d.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd match {
-          case dc: org.apache.spark.sql.DeferredCheckpointRDD =>
-            dc.releaseTarget()
-          case r => r.unpersist(blocking = false)
-        }
-        case _ => ()
-      } catch { case _: Throwable => () }
+    entries.values.foreach {
+      case f: Face => try f.release() catch { case _: Throwable => () }
+      case _ => ()
     }
-    registered.clear()
-    memos.clear()
-    ckpts.clear()
-    faces.clear()
+    entries.clear()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line per run (driver contract).
   *
@@ -42,37 +41,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r17 (guide §1.2 step 3): the 112-query suite compiles several
-      // hundred DISTINCT generated classes per interleaved rep round;
-      // the default 100-entry codegen LRU therefore evicts nearly every
-      // entry before its query's next rep, and non-WSCG projections
-      // recompile INSIDE tasks — a fixed Janino tax on every stage of
-      // every rep. The knob is scale-independent (a JVM compile cache,
-      // not a data/core setting); production multi-query sessions size
-      // it to their plan count the same way.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // r17 session 4 (guide §2.1-2.2): force the SERIALIZED SORT shuffle
-      // writer — the path every production shuffle takes, since bypass
-      // only triggers when partitions <= 200 and a 100 TB job runs
-      // thousands. At the bench's 32 partitions the bypass-merge writer
-      // opens numPartitions DiskBlockObjectWriters PER MAP TASK (32×32
-      // LZ4 streams + 32 KB buffers + file opens per tiny shuffle — JFR:
-      // the top allocation sites of a warm rep), where the sort path
-      // writes one spill file per task. Same-hour A/B at driver
-      // settings: 37.29/33.91 → 31.18/28.24 s (median/min-sum), both
-      // pct 100 uncontended. Results are shuffle-layer-identical.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Timed cold pass = the warmup: each distinct plan pays its codegen
     // compile + JIT + first-touch page-in exactly once, and shared
     // cached artifacts materialize here — measured, not hidden.

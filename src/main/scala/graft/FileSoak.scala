@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Parquet small-file accretion past the 50-batch horizon (r8 verdict
@@ -38,13 +37,7 @@ object FileSoak {
     val nBatches = if (args.length > 0) args(0).toInt
       else sys.env.getOrElse("SPARK_GRAFT_SOAK_BATCHES", "400").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-filesoak-" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ERASURE AT STORE SCALE (round 12). IngestPipeline.forget is
@@ -34,13 +33,7 @@ object ForgetProbe {
     val nForget = if (args.length > 1) args(1).toInt else 10000
     val docsDir = if (args.length > 2) args(2) else "/tmp/graft_sf10"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     def rows(p: String): Long =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pair-mass diagnostic for the postings pair sweep (round 9): the
@@ -32,13 +32,7 @@ object PairMassProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_sf1", "/tmp/graft_sf10")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8, 16)
     println(s"[pairmass] caps = ${Caps.mkString("/")}; mass(c) = " +
       "Σ_{df≤c} df·(df−1)/2 (groups above c are dropped by the df-cut)")
     println(f"[pairmass] ${"dir"}%-22s ${"kind"}%-7s ${"postings"}%12s " +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scale check (r7 verdict #2): run the heavy query tier at
   * sf0.1 and at the synthesized sf1 (10× rows, tools/gen_sf1.py) on the
   * SAME fixed local resources and report the runtime ratio per query —
@@ -11,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * protocol) so container load cannot fabricate a ratio.
   *
   * Two regimes, because the suite memoizes corpus-level artifacts
-  * (Artifacts.shared/memo — the LM table, winnow selections, the
+  * (Artifacts.face/memo — the LM table, winnow selections, the
   * cascade frame) per (session, dir):
   *  - AMORTIZED (default): artifacts build once in the cold pass and
   *    reps measure the marginal query — the Bench protocol's regime,
@@ -59,13 +57,7 @@ object ScaleCheck {
     val partsA = if (args.length > 3) args(3).toInt else 8
     val partsB = if (args.length > 4) args(4).toInt else 8
     val parts = Map(sfA -> partsA, sfB -> partsB)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
 
     val full = sys.env.get("SPARK_GRAFT_SCALE_FULL").contains("1")
     def run(name: String, dir: String): Double = {

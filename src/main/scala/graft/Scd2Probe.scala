@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SCD2 MAINTENANCE AT STORE SCALE (round 12). Scd2SoakSpec pins the
@@ -68,13 +67,7 @@ object Scd2Probe {
         " — use off, fixed:N or growth:X")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     val store = s"${System.getProperty("java.io.tmpdir")}/graft-scd2probe-" +

@@ -20,8 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Artifacts.memo(
-      s"table:${System.identityHashCode(spark)}:$sfDir/$name") {
+    Artifacts.memo(s"table:$sfDir/$name", spark) {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
 
@@ -41,7 +40,7 @@ object Tables {
     * spread frame are memoized per (session, table) alongside the base
     * relation. */
   private[graft] def par(s: SparkSession, df: DataFrame, key: String): DataFrame =
-    Artifacts.memo(s"par:${System.identityHashCode(s)}:$key") {
+    Artifacts.memo(s"par:$key", s) {
       val target = s.sparkContext.defaultParallelism
       val splits = df.rdd.getNumPartitions // resolves splits; runs no job
       if (splits * 2 <= target) df.repartition(target) else df
@@ -71,7 +70,7 @@ object Tables {
     // on events, and returning a FRESH withColumn frame per call both
     // re-ran its analysis per rep and defeated reference-keyed artifact
     // faces downstream (Artifacts.face holds the input by identity)
-    Artifacts.memo(s"events+ts:${System.identityHashCode(s)}:$d") {
+    Artifacts.memo(s"events+ts:$d", s) {
       import org.apache.spark.sql.functions._
       val raw = table(s, d, "events")
       raw.schema("ts").dataType match {
@@ -123,9 +122,8 @@ object Tables {
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       options: Map[String, String] = Map.empty): DataFrame =
     Artifacts.memo(
-      s"tableAs:${System.identityHashCode(spark)}:$format:$path:" +
-        options.toSeq.sorted.mkString(",") + ":" +
-        schema.map(_.catalogString).getOrElse("<none>")) {
+      s"tableAs:$format:$path:" + options.toSeq.sorted.mkString(",") + ":" +
+        schema.map(_.catalogString).getOrElse("<none>"), spark) {
       val reader = spark.read.format(format).options(options)
       schema match {
         case Some(sc) => reader.schema(sc).load(path)

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types._
   * Why (the r2 doGenCode gate, re-measured r5 per VERDICT r4 #8): the
   * composed form — 16 × `aggregate(zip_with(v, c, _*_), 0.0, _+_)`
   * folds plus a 16-struct `sort_array` per row — runs every lambda
-  * interpreted, and DecompProbe put it at 31% of emb_ann_ivf / 27% of
-  * emb_ann_ivf2 at sf0.1, over the ≥20% line the gate set. This
-  * expression does the same 16 dots in tight primitive loops and tracks
-  * the top-2 (score desc, cid asc) directly — no per-row struct array,
-  * no sort.
+  * interpreted, and the since-removed DecompProbe put it at 31% of
+  * emb_ann_ivf / 27% of emb_ann_ivf2 at sf0.1, over the ≥20% line the
+  * gate set. This expression does the same 16 dots in tight primitive
+  * loops and tracks the top-2 (score desc, cid asc) directly — no
+  * per-row struct array, no sort.
   *
   * Exactness: the dot accumulates left-to-right from 0.0 — the same
   * IEEE sequence as the `aggregate` fold and the oracle's list_reduce —

@@ -171,13 +171,15 @@ object ClassifierScoreUnits {
   * Why (r7 verdict #3's measurement gate): the composed fold runs n
   * interpreted lambda frames + n md5 Column evals per row (HOFs never
   * codegen) and was the heaviest per-row compute in the suite under
-  * driver load; DecompProbe measures the roll stage at 40-55% of
-  * doc_fingerprint at sf0.1 — over the r2 doGenCode gate's 20% line.
+  * driver load; the since-removed DecompProbe measured the roll stage
+  * at 40-55% of doc_fingerprint at sf0.1 — over the r2 doGenCode
+  * gate's 20% line.
   * One digest + one fold step per token in a plain JVM loop, one eval
   * per row — the ClassifierScoreUnits class of replacement, so
   * CodegenFallback suffices (not inside a pair scan like LongDot).
-  * Measured win is REAL BUT BOUNDED (RollAb, 7 interleaved reps at
-  * sf0.1: stage median 0.160 → 0.143 s, min 0.146 → 0.114 s): the MD5
+  * Measured win is REAL BUT BOUNDED (the since-removed RollAb, 7
+  * interleaved reps at sf0.1: stage median 0.160 → 0.143 s, min
+  * 0.146 → 0.114 s): the MD5
   * digests dominate both forms — the expression sheds the lambda-frame
   * + conv/substring string machinery, which is what made the composed
   * form contention-hypersensitive under driver load. No overflow:
@@ -231,9 +233,9 @@ object RollingHashUnits {
   * a silent truncated partial sum here would be a drop-in-parity
   * divergence. The composed form runs 2·n interpreted lambda frames
   * per row; in the hash-embed top-k scan that fold IS the query
-  * (DecompProbe: 1.81 s → 0.50 s on the sf0.1 pair scan, 3.6× — over
-  * the r2 doGenCode gate, like IvfAssignTop2). One JVM loop,
-  * bit-identical (integer arithmetic — ExpressionParitySpec).
+  * (the since-removed DecompProbe: 1.81 s → 0.50 s on the sf0.1 pair
+  * scan, 3.6× — over the r2 doGenCode gate, like IvfAssignTop2). One
+  * JVM loop, bit-identical (integer arithmetic — ExpressionParitySpec).
   *
   * Unlike the other expressions in this file (one eval call replacing
   * hundreds of lambda frames, where CodegenFallback suffices), LongDot

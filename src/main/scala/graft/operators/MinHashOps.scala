@@ -402,7 +402,7 @@ object MinHashOps {
     * every token array `bits` times; the explode+agg shape is whole-
     * stage-codegen end to end. Integer-only (exact bit sums, one
     * compare per bit), so DuckDB repeats it verbatim. */
-  private[graft] def simhashWideFrame(docsIn: DataFrame, bits: Int): DataFrame = {
+  private def simhashWideFrame(docsIn: DataFrame, bits: Int): DataFrame = {
     val rows = docsIn
       .select(col("doc_id"), explode(TextOps.tokens).as("t"))
       .withColumn("h",

@@ -98,7 +98,7 @@ object TextOps {
   // r17: the stats faces are THEMSELVES the shared artifacts. The old
   // convention cached them at the composition sites (trainingSet /
   // corpusReport) and let the CacheManager's canonical-plan match
-  // substitute the standalone query faces — Artifacts.shared no longer
+  // substitute the standalone query faces — an artifact face no longer
   // registers the raw build plan (it returns a memoized
   // lineage-truncated checkpoint), so the sharing moves into the
   // builder: every consumer, composed or standalone, reads one
@@ -137,10 +137,10 @@ object TextOps {
     * The rolling hash runs as the RollingHashUnits expression (r8):
     * the composed `aggregate` HOF fold — kept below as the parity twin
     * — paid n interpreted lambda frames + n md5 Column evals per row,
-    * DecompProbe-measured at 55% of this query (over the r2 doGenCode
-    * gate's 20% line, r7 verdict #3); the expression does one JVM loop
-    * per row, bit-identical (ExpressionParitySpec + this query's own
-    * DuckDB twin). */
+    * measured at 55% of this query by the since-removed DecompProbe
+    * (over the r2 doGenCode gate's 20% line, r7 verdict #3); the
+    * expression does one JVM loop per row, bit-identical
+    * (ExpressionParitySpec + this query's own DuckDB twin). */
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documentsPar(spark, dir)
       .withColumn("toks", tokens)
@@ -153,7 +153,7 @@ object TextOps {
       .orderBy("doc_id")
 
   /** The composed rolling-hash fold — ExpressionParitySpec's twin for
-    * RollingHashUnits (and DecompProbe's measurement face). */
+    * RollingHashUnits. */
   private[graft] def fpRollComposed(toks: Column): Column =
     aggregate(toks, lit(0L), (acc, t) =>
       (acc * lit(31L)
@@ -556,7 +556,7 @@ object TextOps {
     // the slim (doc_id, chunk_md5) frame feeds BOTH the span-stats
     // aggregate and the join-back; cached, or the tokenize+slice+md5
     // chunk derivation runs twice (ExplainProbe showed the double scan)
-    val ch = graft.Artifacts.shared(
+    val ch = graft.Artifacts.face("spanChunks", docs)(
       chunkFrame(docs).select("doc_id", "chunk_md5"))
     val spans = ch.groupBy("chunk_md5").agg(
       countDistinct(col("doc_id")).as("n_docs"),
@@ -1302,8 +1302,7 @@ object TextOps {
     // production shape materializes the eval-split bloom beside the
     // eval release, not per query — so bench reps pay the join, not a
     // driver count() + treeAggregate rebuild per rep.
-    val bc = graft.Artifacts.memo(
-      s"decontam-bloom:${System.identityHashCode(spark)}:$dir") {
+    val bc = graft.Artifacts.memo(s"decontam-bloom:$dir", spark) {
       val nEval = evalGrams.count() // one cheap job over the cached artifact
       val bloom = evalGrams.stat.bloomFilter("gram", math.max(nEval, 1L), 0.01)
       spark.sparkContext.broadcast(bloom)
@@ -1936,8 +1935,7 @@ object TextOps {
     * replayable lineage; unpersistAll clears the memo with the rest of
     * the artifact state. */
   private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.memo(
-      s"neardup-labels:${System.identityHashCode(spark)}:$dir") {
+    graft.Artifacts.memo(s"neardup-labels:$dir", spark) {
       val edges = ngramJaccardPairsAll(spark, dir)
         .filter(col("jaccard") >= 0.5)
         .select("d1", "d2")
@@ -2106,8 +2104,7 @@ object TextOps {
     * as the decontamination bloom. */
   private[graft] def trainedMerges(spark: SparkSession, dir: String,
       k: Int): Seq[(Int, String, String, Long)] =
-    graft.Artifacts.memo(
-      s"bpe-merges:${System.identityHashCode(spark)}:$dir:$k") {
+    graft.Artifacts.memo(s"bpe-merges:$dir:$k", spark) {
       trainMerges(spark, wordFreq(spark, dir), k)
     }
 
@@ -2349,8 +2346,7 @@ object TextOps {
 
   private[graft] def trainedUnigram(spark: SparkSession, dir: String,
       vocabSize: Int, rounds: Int): Seq[(String, Long, Long)] =
-    graft.Artifacts.memo(
-      s"uni-vocab:${System.identityHashCode(spark)}:$dir:$vocabSize:$rounds") {
+    graft.Artifacts.memo(s"uni-vocab:$dir:$vocabSize:$rounds", spark) {
       unigramTrainFromWordFreq(spark, wordFreq(spark, dir), vocabSize, rounds)
     }
 
@@ -2482,17 +2478,15 @@ object TextOps {
             concat_ws(" ", element_at(col("toks"), i),
               element_at(col("toks"), i + 1))))).as("bg"))
 
+  /** (bg, cb): how often each bigram occurs in `pairs`. */
+  private[graft] def bigramCounts(pairs: DataFrame): DataFrame =
+    pairs.groupBy("bg").agg(count(lit(1)).as("cb"))
+
   /** The trained LM itself — (bg, g): grid-quantized conditional
-    * bigram frequency. Extracted so the streaming ingest gate can
-    * TRAIN it once on a corpus and score later batches against it
-    * (`CorpusIngest.trainLmModel`/`gateLm`). */
-  private[graft] def bigramModel(pairs: DataFrame): DataFrame = {
-    // the bigram-count table is the LM model — a shared artifact (like
-    // gramsTable), so the prefix fold, the ratio attach, and warm bench
-    // reps all read one materialization instead of re-running the
-    // explode+lead pass (plan showed 3 corpus passes without it)
-    val cb = graft.Artifacts.face("bigramCounts", pairs)(
-      pairs.groupBy("bg").agg(count(lit(1)).as("cb")))
+    * bigram frequency over a `bigramCounts` table. Extracted so the
+    * streaming ingest gate can TRAIN it once on a corpus and score
+    * later batches against it (`CorpusIngest.trainLmModel`/`gateLm`). */
+  private[graft] def bigramModel(cb: DataFrame): DataFrame = {
     // prefix totals fold over the (small) bigram-count table, not the
     // exploded pairs — one corpus aggregation, not two
     val cp = cb.groupBy(split(col("bg"), " ").getItem(0).as("w1"))
@@ -2521,7 +2515,12 @@ object TextOps {
     // gramsTable (r17: the interpreted slice-zip explode was re-running
     // per consumer, ~7 CPU·s each at sf0.1)
     val pairs = graft.Artifacts.face("bigramPairs", docs)(bigramPairs(docs))
-    val scored = bigramModel(pairs)
+    // the bigram-count table is the LM model — a shared artifact (like
+    // gramsTable), so the prefix fold, the ratio attach, and warm bench
+    // reps all read one materialization instead of re-running the
+    // explode+lead pass (plan showed 3 corpus passes without it)
+    val scored = bigramModel(
+      graft.Artifacts.face("bigramCounts", pairs)(bigramCounts(pairs)))
     // SHUFFLE-HASH with the count table as build side: without the hint
     // the planner broadcasts whichever side its static estimate likes —
     // at test SFs that was the exploded CORPUS pairs (a corpus broadcast
@@ -2794,28 +2793,6 @@ object TextOps {
       .orderBy("q_id", "rn")
   }
 
-  /** DecompProbe face of the top-k scan: the same pair scoring with the
-    * dot either composed (aggregate∘zip_with) or the LongDot loop —
-    * the measurement behind the production choice. */
-  private[graft] def hashEmbedTopKProbe(spark: SparkSession, dir: String,
-      composedDot: Boolean): DataFrame = {
-    val base = Tables.documentsPar(spark, dir)
-      .withColumn("toks", tokens)
-      .select(col("doc_id"),
-        graft.plans.GraftFunctions.graftHashEmbed("toks").as("emb"))
-      .withColumn("is_eval", sampleBucket === 0)
-    val q = base.filter(col("is_eval"))
-      .select(col("doc_id").as("q_id"), col("emb").as("qemb"))
-    val c = base.filter(!col("is_eval"))
-      .select(col("doc_id").as("c_id"), col("emb").as("cemb"))
-    val dot =
-      if (composedDot)
-        aggregate(zip_with(col("qemb"), col("cemb"), (a, b) => a * b),
-          lit(0L), (s, x) => s + x)
-      else graft.plans.GraftFunctions.graftDotLong("qemb", "cemb")
-    c.join(broadcast(q)).select(col("q_id"), col("c_id"), dot.as("dot"))
-  }
-
   /** IVF-prefiltered hashed-document search (`emb_hash_ann`) — the
     * SCALE path the brute-force `hashEmbedTopK` is the recall oracle
     * for, mirroring the embedding tier's composition (emb_ann_ivfpq:
@@ -2845,7 +2822,7 @@ object TextOps {
     val base = hashEmbedBase(spark, dir)
     val cand = base.filter(!col("is_eval"))
     val cents: IndexedSeq[(Seq[Long], Long)] = graft.Artifacts.memo(
-      s"hash-ivf:${System.identityHashCode(spark)}:$dir:$nCent") {
+      s"hash-ivf:$dir:$nCent", spark) {
       cand.orderBy("doc_id").limit(nCent)
         .select(col("emb"), col("norm_sq")).collect()
         .map(r => (r.getSeq[Long](0), r.getLong(1))).toIndexedSeq

@@ -333,13 +333,15 @@ object CorpusIngest {
 
   /** Train the bigram-LM model on a reference corpus and persist it —
     * the MODEL artifact the fluency gate scores against. One corpus
-    * pass; the table is (bg, g), vocab²-bounded and slim. */
+    * pass; the table is (bg, g), vocab²-bounded and slim. A one-shot
+    * write: it leaves no session artifact behind. */
   def trainLmModel(spark: SparkSession, corpusDir: String,
-      modelPath: String): Unit =
-    graft.operators.TextOps.bigramModel(
-      graft.operators.TextOps.bigramPairs(normWs(
-        graft.Tables.documentsPar(spark, corpusDir))))
+      modelPath: String): Unit = {
+    import graft.operators.TextOps.{bigramCounts, bigramModel, bigramPairs}
+    bigramModel(bigramCounts(bigramPairs(normWs(
+      graft.Tables.documentsPar(spark, corpusDir)))))
       .write.mode("overwrite").parquet(modelPath)
+  }
 
   /** Score documents against a TRAINED LM table — the deployment shape
     * of doc_bigram_lm: training happened once on the reference corpus,

@@ -369,8 +369,7 @@ object IngestPipeline {
     * memo holds materialized blocks; unpersistAll clears it with the
     * rest of the artifact state. */
   def cascade(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.memo(
-      s"ingest-cascade:${System.identityHashCode(spark)}:$dir") {
+    graft.Artifacts.memo(s"ingest-cascade:$dir", spark) {
       cascadeFrame(spark, graft.Tables.documentsPar(spark, dir)
         .select("doc_id", "lang", "source", "text"))
         .localCheckpoint(true)

@@ -5,11 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-/** Bridge into `private[sql]` seams: two for graft.Artifacts (r17
-  * optimization round; see Artifacts.shared's scaladoc for the measured
+/** Bridge into `private[sql]` seams: two for graft.Artifacts' faces
+  * (r17 optimization round; see the Artifacts scaladoc for the measured
   * rationale) and one for graft.plans' column faces.
   *
-  * Why it exists: a shared derived artifact wants BOTH
+  * Why it exists: an artifact face wants BOTH
   *  (a) lineage truncation — `.cache()` keeps the artifact's entire
   *      build plan in every consumer task's closure, and JFR showed the
   *      suite spending >30% of warm executor samples Java-deserializing
@@ -27,7 +27,8 @@ import org.apache.spark.storage.StorageLevel
   * [[GraftSqlBridge.deferredDataset]] wraps it as a leaf Dataset without
   * touching the RDD (the `internalCreateDataFrame` seam — the public
   * `createDataFrame` faces force row conversion or partition
-  * resolution).
+  * resolution). The Artifacts map keeps each face's checkpoint RDD in
+  * the face's own entry, so `unpersistAll` releases it directly.
   *
   * [[GraftSqlBridge.column]] wraps a Catalyst expression as a Column
   * (`classic.ExpressionUtils`), so a face needs no function registry

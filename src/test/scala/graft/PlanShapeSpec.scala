@@ -32,7 +32,7 @@ class PlanShapeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def countIn(s: String, needle: String): Int =
     needle.r.findAllIn(s).length
 
-  // a shared-artifact read: r17 switched Artifacts.shared from .cache()
+  // a shared-artifact read: r17 switched shared artifacts from .cache()
   // (InMemoryTableScan) to a memoized lazy localCheckpoint (Scan
   // ExistingRDD) to truncate the build lineage out of consumer task
   // closures; the pins below assert the INTENT — both consumers read one

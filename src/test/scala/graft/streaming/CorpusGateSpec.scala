@@ -121,7 +121,10 @@ class CorpusGateSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val model = Files.createTempDirectory("lmmodel").toString + "/m"
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     CorpusIngest.trainLmModel(spark, sf(), model)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "a one-shot model write must leave no session artifact behind")
     val scored = CorpusIngest.lmScore(
       graft.Tables.documents(spark, sf()), spark.read.parquet(model))
     val reference = graft.SparkEntry.queries("doc_bigram_lm")(spark, sf())
