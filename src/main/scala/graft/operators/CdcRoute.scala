@@ -83,24 +83,6 @@ object CdcRoute {
         element_at(col("hmap"), "occurred_at").cast("long").as("occurred_at_ms"))
   }
 
-  /** CDC SNAPSHOT MERGE — the consumer-side half of the outbox pattern:
-    * apply a change batch to a current-state snapshot with latest-wins
-    * semantics, the batch face of the `foreachBatch` + MERGE upsert
-    * every CDC sink runs (reference consumers rebuild exactly this
-    * state from the routed topic; README.md:96-104). The change stream
-    * here is `events` keyed by user_id (each event upserts that user's
-    * last-action state), the snapshot is `customer` — restricted to
-    * even keys so all three merge outcomes (update, insert, untouched
-    * row) genuinely occur in the output.
-    *
-    * Scale shape: the change batch reduces to ONE row per key before
-    * the merge join — row_number + count share a single hash exchange
-    * on user_id (one Window sort), so the join input is |keys|, not
-    * |events|. The merge itself is a full-outer sort-merge join
-    * co-partitioned on the key: at 100 TB both sides shuffle on the
-    * same key once (with a bucketed/partitioned snapshot table even
-    * that exchange drops — BucketingSpec shows the layout), and AQE
-    * splits any hot key. No driver-side state, no collect. */
   /** SCD TYPE-2 HISTORY — the other canonical CDC consumer beside the
     * latest-wins snapshot (`snapshotMerge` keeps ONE row per key; a
     * type-2 dimension keeps EVERY tracked-state run as a versioned row
@@ -190,6 +172,24 @@ object CdcRoute {
       .orderBy("user_id")
   }
 
+  /** CDC SNAPSHOT MERGE — the consumer-side half of the outbox pattern:
+    * apply a change batch to a current-state snapshot with latest-wins
+    * semantics, the batch face of the `foreachBatch` + MERGE upsert
+    * every CDC sink runs (reference consumers rebuild exactly this
+    * state from the routed topic; README.md:96-104). The change stream
+    * here is `events` keyed by user_id (each event upserts that user's
+    * last-action state), the snapshot is `customer` — restricted to
+    * even keys so all three merge outcomes (update, insert, untouched
+    * row) genuinely occur in the output.
+    *
+    * Scale shape: the change batch reduces to ONE row per key before
+    * the merge join — row_number + count share a single hash exchange
+    * on user_id (one Window sort), so the join input is |keys|, not
+    * |events|. The merge itself is a full-outer sort-merge join
+    * co-partitioned on the key: at 100 TB both sides shuffle on the
+    * same key once (with a bucketed/partitioned snapshot table even
+    * that exchange drops — BucketingSpec shows the layout), and AQE
+    * splits any hot key. No driver-side state, no collect. */
   def snapshotMerge(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.customer(spark, dir)
       .filter(col("c_custkey") % 2 === 0)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.streaming.OutboxPipeline.OrderRec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,16 +47,12 @@ object JdbcSource {
       .jdbc(url, "app.outbox", props)
       .filter(col("occurred_at_ms") >= fromMs && col("occurred_at_ms") < toMs)
 
-  /** One order+outbox record in the app.orders/app.outbox shape. */
-  final case class JdbcOrder(orderId: String, clientOrderId: String,
-    symbol: String, side: String, qty: Double, price: Double,
-    status: String, payload: String, occurredAtMs: Long)
-
   /** Executor-side partition write: one JDBC transaction per partition,
     * per-record savepoint so a duplicate key (replayed batch) skips just
-    * that record and the rest of the batch still commits. Returns
-    * (attempted, inserted) for the ratio report. */
-  def writeOrdersPartition(url: String, rows: Iterator[JdbcOrder]): (Long, Long) = {
+    * that record and the rest of the batch still commits. Orders are
+    * written `PENDING`, stamped with their window start. Returns the
+    * number of orders inserted, for the ratio report. */
+  def writeOrdersPartition(url: String, rows: Iterator[OrderRec]): Long = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
@@ -65,13 +62,11 @@ object JdbcSource {
       val bStmt = conn.prepareStatement(
         "INSERT INTO app.outbox (event_id, aggregate_type, aggregate_id, " +
           "type, payload, occurred_at, occurred_at_ms) VALUES (?,?,?,?,?,?,?)")
-      var attempted = 0L
       var inserted = 0L
       rows.foreach { r =>
-        attempted += 1
         val sp = conn.setSavepoint()
         try {
-          val ts = new java.sql.Timestamp(r.occurredAtMs)
+          val ts = new java.sql.Timestamp(r.wStart)
           oStmt.setString(1, r.orderId)
           oStmt.setString(2, r.clientOrderId)
           oStmt.setString(3, r.symbol)
@@ -80,7 +75,7 @@ object JdbcSource {
             java.math.RoundingMode.HALF_UP))
           oStmt.setBigDecimal(6, new java.math.BigDecimal(r.price).setScale(8,
             java.math.RoundingMode.HALF_UP))
-          oStmt.setString(7, r.status)
+          oStmt.setString(7, "PENDING")
           oStmt.setTimestamp(8, ts)
           oStmt.setTimestamp(9, ts)
           oStmt.executeUpdate()
@@ -90,7 +85,7 @@ object JdbcSource {
           bStmt.setString(4, "ORDER_CREATED")
           bStmt.setString(5, r.payload)
           bStmt.setTimestamp(6, ts)
-          bStmt.setLong(7, r.occurredAtMs)
+          bStmt.setLong(7, r.wStart)
           bStmt.executeUpdate()
           inserted += 1
           // successful record: the savepoint is no longer needed — release
@@ -111,7 +106,7 @@ object JdbcSource {
         }
       }
       conn.commit()
-      (attempted, inserted)
+      inserted
     } finally conn.close()
   }
 }

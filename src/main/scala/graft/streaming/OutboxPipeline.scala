@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{CdcRoute, OrderOps}
+import graft.operators.OrderOps
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -15,9 +15,9 @@ import scala.collection.concurrent.TrieMap
   * atomic two-table write keyed by the unique `client_order_id`
   * (configmap-init.yaml:48-49 → `ON CONFLICT DO NOTHING`). Here the
   * "database" is an in-JVM transactional store with the same contract
-  * (putIfAbsent == the unique-key insert); the production variant swaps
-  * `TxnStore.writeAtomically` for a JDBC transaction per partition —
-  * identical shape, identical replay-safety. Spark's checkpoint gives
+  * (putIfAbsent == the unique-key insert); the production store,
+  * `JdbcStore`, is a JDBC transaction per partition — one sink, the store
+  * its argument, identical replay-safety. Spark's checkpoint gives
   * source-offset replay; the idempotent key turns replays into no-ops —
   * end-to-end exactly-once without Kafka transactions (SURVEY §2.10).
   *
@@ -30,25 +30,49 @@ import scala.collection.concurrent.TrieMap
   */
 object OutboxPipeline {
 
-  case class OrderRec(clientOrderId: String, symbol: String, side: String,
-    action: String, qty: Double, price: Double, payload: String, wStart: Long)
+  /** One order + its outbox event, for either store. */
+  case class OrderRec(orderId: String, clientOrderId: String, symbol: String,
+    side: String, action: String, qty: Double, price: Double, payload: String,
+    wStart: Long)
+
+  /** Where the orders sink writes: an executor-side partition writer that
+    * returns how many rows it inserted (a replayed row inserts none). */
+  trait OrderStore extends Serializable {
+    def writePartition(rows: Iterator[OrderRec]): Long
+  }
 
   /** In-JVM stand-in for Postgres app.orders + app.outbox with the same
-    * atomicity + idempotency contract. */
-  object TxnStore {
+    * atomicity + idempotency contract — the test double of `JdbcStore`.
+    * A task closure that captures it deserializes to this JVM's
+    * singleton (Scala module proxy), so local-mode executors write the
+    * maps the driver reads. */
+  object TxnStore extends OrderStore {
     val orders = new ConcurrentHashMap[String, OrderRec]()
     val outbox = new TrieMap[String, String]() // event per order, atomic with it
     @volatile var duplicateAttempts: Long = 0L
 
     /** One "transaction": order insert-if-absent + outbox event, atomic
       * per record (the JDBC twin: INSERT ... ON CONFLICT DO NOTHING +
-      * outbox INSERT in one txn — DatabaseManager.kt:33-88). */
-    def writeAtomically(r: OrderRec): Unit = {
+      * outbox INSERT in one txn — DatabaseManager.kt:33-88). Returns
+      * whether the order was inserted. */
+    def writeAtomically(r: OrderRec): Boolean = {
       val prev = orders.putIfAbsent(r.clientOrderId, r)
       if (prev == null) outbox.put(r.clientOrderId, r.payload)
       else synchronized { duplicateAttempts += 1 }
+      prev == null
     }
+    def writePartition(rows: Iterator[OrderRec]): Long =
+      rows.count(writeAtomically).toLong
     def clear(): Unit = { orders.clear(); outbox.clear(); duplicateAttempts = 0 }
+  }
+
+  /** The production store: a real JDBC database at `url`, one
+    * transaction per partition (JdbcSource.writeOrdersPartition, the
+    * reference's saveOrderWithOutbox, DatabaseManager.kt:33-88).
+    * JdbcEosSpec drives it against in-process Derby. */
+  final case class JdbcStore(url: String) extends OrderStore {
+    def writePartition(rows: Iterator[OrderRec]): Long =
+      graft.sources.JdbcSource.writeOrdersPartition(url, rows)
   }
 
   /** O7 (OrderService.kt:72-81, processor Main.kt:68-92): the reference
@@ -77,42 +101,42 @@ object OutboxPipeline {
   }
 
   /** O4/O5 sink: decisions stream → sized orders → idempotent atomic
-    * writes, per partition (no collect — the iterator streams through
-    * the executor, exactly how the JDBC variant batches statements). */
-  def ordersSink(spark: SparkSession, decisions: DataFrame,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
+    * writes into `store`, per partition (no collect — the iterator
+    * streams through the executor; the JDBC store batches statements). */
+  def ordersSink(spark: SparkSession, decisions: DataFrame, checkpoint: String,
+      store: OrderStore = TxnStore): DataStreamWriter[org.apache.spark.sql.Row] =
     decisions.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second")) // reference commit cadence
-      .foreachBatch { (batch: DataFrame, _: Long) => writeDecisionsBatch(batch) }
+      .foreachBatch { (batch: DataFrame, _: Long) => writeDecisionsBatch(batch, store) }
 
   /** One micro-batch of the orders sink: size the decisions, write them
-    * idempotently, feed the ratio report. Shared with test sinks that
-    * wrap it (e.g. crash injection in ResilienceSpec).
+    * idempotently into `store`, feed the ratio report. Shared with test
+    * sinks that wrap it (e.g. crash injection in ResilienceSpec).
     *
     * One Spark action per batch: the decisions entering the batch are
-    * counted by an `Observation` on `batch`, read after the write job.
-    * `batch` is a plan over the micro-batch's RDD, so a separate
-    * `count()` would re-run the window aggregate's result stage and
-    * commit its state-store version a second time. */
-  def writeDecisionsBatch(batch: DataFrame): Unit = {
+    * counted by an `Observation` on `batch`, and the orders the store
+    * inserted by an accumulator on the write tasks, both read after the
+    * write job. `batch` is a plan over the micro-batch's RDD, so a
+    * separate `count()` would re-run the window aggregate's result stage
+    * and commit its state-store version a second time. */
+  def writeDecisionsBatch(batch: DataFrame, store: OrderStore = TxnStore): Unit = {
     val entering = Observation()
-    val createdBefore = TxnStore.orders.size()
+    val created = batch.sparkSession.sparkContext.longAccumulator
     val sized = OrderOps.fromDecisions(batch.sparkSession,
       batch.observe(entering, count(lit(1)).as("decisions")))
     sized.select(
+      col("order_id").as("orderId"),
       col("client_order_id").as("clientOrderId"), col("symbol"),
       col("order_side").as("side"), col("action"),
       col("order_qty").as("qty"), col("market_price").as("price"),
       col("payload"), col("w_start").as("wStart"))
       .as[OrderRec](org.apache.spark.sql.Encoders.product[OrderRec])
       .foreachPartition { (it: Iterator[OrderRec]) =>
-        it.foreach(TxnStore.writeAtomically)
+        created.add(store.writePartition(it))
       }
-    RatioReport.record(entering.get("decisions").asInstanceOf[Long],
-      (TxnStore.orders.size() - createdBefore).toLong)
-    ()
+    RatioReport.record(entering.get("decisions").asInstanceOf[Long], created.sum)
   }
 
   /** The reference's failure policy (signal-processor Main.kt:36-39 +
@@ -143,44 +167,6 @@ object OutboxPipeline {
       }
     }
     restarts
-  }
-
-  /** O4, production face: the same decisions sink but against a real
-    * JDBC database — one transaction per partition via
-    * JdbcSource.writeOrdersPartition (the reference's
-    * saveOrderWithOutbox, DatabaseManager.kt:33-88). Replays are no-ops
-    * through the unique client_order_id, exactly like the TxnStore
-    * variant; JdbcEosSpec drives it against in-process Derby. */
-  def ordersSinkJdbc(spark: SparkSession, decisions: DataFrame,
-      checkpoint: String, url: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    decisions.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sized = OrderOps.fromDecisions(batch.sparkSession, batch)
-        sized.select(
-          col("order_id").as("orderId"),
-          col("client_order_id").as("clientOrderId"), col("symbol"),
-          col("order_side").as("side"),
-          col("order_qty").as("qty"), col("market_price").as("price"),
-          lit("PENDING").as("status"), col("payload"),
-          col("w_start").as("occurredAtMs"))
-          .as[graft.sources.JdbcSource.JdbcOrder](
-            org.apache.spark.sql.Encoders.product[graft.sources.JdbcSource.JdbcOrder])
-          .foreachPartition { (it: Iterator[graft.sources.JdbcSource.JdbcOrder]) =>
-            graft.sources.JdbcSource.writeOrdersPartition(url, it)
-            ()
-          }
-        ()
-      }
-
-  /** Outbox rows as a DataFrame (for the parquet-WAL variant of the
-    * relay and for tests). */
-  def outboxFrame(spark: SparkSession): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    TxnStore.orders.values.asScala.toSeq.toDF()
   }
 
   /** C1-C4 relay over a parquet-append outbox directory: tail the "WAL"

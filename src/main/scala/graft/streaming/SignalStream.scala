@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Decide
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -137,12 +137,4 @@ object SignalStream {
         col("confidence"), col("suggested_price"), col("suggested_qty"),
         col("reason"))).as("value"),
       lit("trading.decisions").as("topic"))
-
-  /** Streaming dedup on the decision business key within the watermark —
-    * the reader-side half of end-to-end exactly-once for Kafka sinks. */
-  def dedupDecisions(decisions: DataFrame): DataFrame =
-    decisions
-      .withColumn("event_time", timestamp_millis(col("w_start")))
-      .withWatermark("event_time", "10 minutes")
-      .dropDuplicatesWithinWatermark("w_start", "symbol")
 }

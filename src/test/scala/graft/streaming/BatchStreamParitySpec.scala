@@ -2,7 +2,10 @@ package graft.streaming
 
 import graft.{SparkSpec, Tables}
 import graft.operators.{Decide, SignalOps}
+import graft.sources.SignalGen
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
 /** The UDAF/streaming pipeline and the batch two-level aggregation are two
   * physical strategies for one logical operator — their outputs must be
@@ -59,5 +62,45 @@ class BatchStreamParitySpec extends SparkSpec {
       assert(got == expect.toSeq, s"signals mismatch for $k")
     }
     assert(batchSigs.nonEmpty)
+  }
+
+  test("decisions streamed over 2 micro-batches == batch, bit-exact") {
+    // two files read one per trigger: a window's state is carried across
+    // the micro-batch boundary and its latest update must equal the
+    // one-shot batch aggregate over all rows
+    val base = Files.createTempDirectory("window-parity").toString
+    val srcDir = Paths.get(base, "src")
+    Files.createDirectories(srcDir)
+    val rows = SignalGen.batch(spark, 900, gapMs = 400L)
+      .select("value").collect().map(_.getString(0))
+    Files.write(srcDir.resolve("a.json"), rows.take(450).mkString("\n").getBytes("UTF-8"))
+    Files.write(srcDir.resolve("b.json"), rows.drop(450).mkString("\n").getBytes("UTF-8"))
+    def raw(df: DataFrame): DataFrame = df.selectExpr("value", "CAST(0 AS LONG) AS seq")
+
+    val latest = scala.collection.mutable.Map.empty[(Long, String), (Long, Row)]
+    var carried = 0 // updates to a key an earlier micro-batch emitted
+    val q = SignalStream.decisions(spark, SignalStream.parse(
+        raw(spark.readStream.option("maxFilesPerTrigger", 1).text(srcDir.toString))),
+        "5 minutes")
+      .writeStream
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("update")
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        df.collect().foreach { r =>
+          val k = (r.getLong(0), r.getString(1))
+          if (latest.get(k).exists(_._1 < batchId)) carried += 1
+          if (latest.get(k).forall(_._1 < batchId)) latest(k) = (batchId, r)
+        }
+      }.start()
+    q.processAllAvailable()
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    q.stop()
+
+    val oneShot = SignalStream.decisions(spark,
+      SignalStream.parse(raw(spark.read.text(srcDir.toString))), "5 minutes")
+      .collect().map(_.toSeq).toSet
+    assert(batches == 2, s"expected one micro-batch per file, got $batches")
+    assert(oneShot.nonEmpty && carried > 0)
+    assert(latest.values.map(_._2.toSeq).toSet == oneShot)
   }
 }

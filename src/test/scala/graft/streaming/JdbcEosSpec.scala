@@ -69,7 +69,8 @@ class JdbcEosSpec extends SparkSpec {
       .selectExpr("value", "CAST(0 AS LONG) AS seq")
     val parsed = SignalStream.dedupSignals(SignalStream.parse(raw))
     val decisions = SignalStream.decisions(spark, parsed, "5 minutes")
-    val q = OutboxPipeline.ordersSinkJdbc(spark, decisions, ckpt, url).start()
+    val q = OutboxPipeline.ordersSink(spark, decisions, ckpt,
+      OutboxPipeline.JdbcStore(url)).start()
     q.processAllAvailable()
     q.stop()
   }
@@ -77,6 +78,7 @@ class JdbcEosSpec extends SparkSpec {
   test("streaming decisions -> JDBC txn sink; replays are no-ops; " +
     "recent/incremental reads see the committed rows") {
     initDdl()
+    OutboxPipeline.RatioReport.reset()
     val base = Files.createTempDirectory("jdbceos").toString
     val (srcDir, ckpt) = (s"$base/src", s"$base/ckpt")
     Files.createDirectories(Paths.get(srcDir))
@@ -88,6 +90,10 @@ class JdbcEosSpec extends SparkSpec {
     val orders1 = count("app.orders")
     assert(orders1 > 0, "JDBC sink wrote no orders")
     assert(count("app.outbox") == orders1, "outbox not atomic with orders")
+    // O7 on the JDBC store: the ratio report counts what the store inserted
+    val report = OutboxPipeline.RatioReport
+    assert(report.decisionsProcessed > 0, report.report)
+    assert(report.ordersCreated == orders1, report.report)
 
     // at-least-once redelivery: same signals again, same checkpoint —
     // the unique client_order_id turns every replayed insert into a no-op
@@ -95,17 +101,18 @@ class JdbcEosSpec extends SparkSpec {
     runStream(srcDir, ckpt)
     assert(count("app.orders") == orders1, "replay changed app.orders — EOS broken")
     assert(count("app.outbox") == orders1, "replay changed app.outbox — EOS broken")
+    assert(report.ordersCreated == orders1, s"replay counted as created: ${report.report}")
 
     // direct partition-level replay of everything already committed
     // Derby surfaces identifiers uppercase
     val all = spark.read.jdbc(url, "app.orders", new java.util.Properties)
       .collect().map { r =>
-        JdbcSource.JdbcOrder(r.getAs[String]("ID").trim,
+        OutboxPipeline.OrderRec(r.getAs[String]("ID").trim,
           r.getAs[String]("CLIENT_ORDER_ID"), r.getAs[String]("SYMBOL"),
-          r.getAs[String]("SIDE"), 1.0, 1.0, "PENDING", "{}", 1704067200000L)
+          r.getAs[String]("SIDE"), "BUY", 1.0, 1.0, "{}", 1704067200000L)
       }
-    val (attempted, inserted) = JdbcSource.writeOrdersPartition(url, all.iterator)
-    assert(attempted == orders1 && inserted == 0,
+    val inserted = JdbcSource.writeOrdersPartition(url, all.iterator)
+    assert(all.length == orders1 && inserted == 0,
       s"expected all $orders1 replays skipped, inserted=$inserted")
 
     // S4 read paths over the committed state
